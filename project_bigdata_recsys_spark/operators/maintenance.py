@@ -504,6 +504,7 @@ def stream_merge_apply_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         bump_price_cents,
     )
     from project_bigdata_recsys_spark.sources.ingest import hash_uniform
+    from project_bigdata_recsys_spark.streaming.jobs import run_bounded
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -563,22 +564,9 @@ def stream_merge_apply_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             batch_df.unpersist()
 
-    ck = os.path.join(scratch_dir(prefix="spark_ck_"), "ck")
-    q = (
-        changelog.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
+    run_bounded(
+        spark, changelog.writeStream.foreachBatch(apply_batch), "stream_merge_apply"
     )
-    # awaitTermination returns False on timeout with the query STILL
-    # RUNNING — reading the target then would profile a half-merged
-    # table; fail loudly instead
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError(
-            "stream_merge_apply: availableNow merge did not finish in 600s"
-            + (f" (query error: {q.exception()})" if q.exception() else "")
-        )
     return (
         spark.read.parquet(target)
         .groupBy("o_orderstatus")

@@ -422,6 +422,7 @@ def stream_join_view_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from project_bigdata_recsys_spark.caching import scratch_dir
     from project_bigdata_recsys_spark.catalog import load_table
     from project_bigdata_recsys_spark.sources.ingest import hash_uniform
+    from project_bigdata_recsys_spark.streaming.jobs import run_bounded
 
     dirs = setup_join_view(spark, sf_dir, write_fact_ledger=False)
     os.makedirs(dirs["fact_ledger"], exist_ok=True)
@@ -449,37 +450,14 @@ def stream_join_view_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
             return
         batch_df.write.mode("append").parquet(dirs["fact_ledger"])
 
-    ck = os.path.join(scratch_dir(prefix="spark_jv_ck_"), "ck")
-    q = (
-        stream.writeStream.foreachBatch(append_batch)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
+    # min_commits: maxFilesPerTrigger must actually have split the three
+    # replay files into three ledger appends
+    run_bounded(
+        spark,
+        stream.writeStream.foreachBatch(append_batch),
+        "stream_join_view_mor",
+        min_commits=3,
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError(
-            "stream_join_view_mor: availableNow replay did not finish in"
-            " 600s"
-            + (f" (query error: {q.exception()})" if q.exception() else "")
-        )
-    # enforce the multi-batch claim (the _run_replay_incremental
-    # discipline): maxFilesPerTrigger must actually have split the three
-    # replay files into three ledger appends — a Spark behavior change
-    # collapsing them into one batch would silently weaken this gate to
-    # the single-append form
-    n_commits = len(
-        [
-            f
-            for f in os.listdir(os.path.join(ck, "commits"))
-            if not f.startswith(".")
-        ]
-    )
-    if n_commits < 3:
-        raise AssertionError(
-            f"stream_join_view_mor: expected >=3 micro-batch appends,"
-            f" got {n_commits} checkpoint commits"
-        )
     resolved = resolve_join_view(
         spark,
         dirs["base"],

@@ -44,7 +44,8 @@ from project_bigdata_recsys_spark.sources.ingest import (
 )
 from project_bigdata_recsys_spark.streaming.jobs import (
     bootstrapped_feature_stream,
-    model_scoring_stream,
+    model_scoring_writer,
+    run_bounded,
     streaming_progress_summary,
 )
 
@@ -121,15 +122,10 @@ def run_full_pipeline(
     feat_stream = bootstrapped_feature_stream(
         spark, sf_dir, snapshot, os.path.join(work_dir, "replay_staging")
     )
-    feat_q = (
-        feat_stream.writeStream.format("memory")
-        .queryName("pipeline_features")
-        .option(
-            "checkpointLocation", os.path.join(work_dir, "ck_features")
-        )
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+    feat_q = run_bounded(
+        spark,
+        feat_stream.writeStream.format("memory").outputMode("update"),
+        "pipeline_features",
     )
 
     # ---- stage 4b: streamed model scoring (M8) over the training frame
@@ -137,17 +133,14 @@ def run_full_pipeline(
     feature_dir = os.path.join(work_dir, "feature_stream")
     frame.repartition(2).write.mode("overwrite").parquet(feature_dir)
     scored_dir = os.path.join(work_dir, "scored")
-    score_q = model_scoring_stream(
-        spark, gbt.model, feature_dir, frame.schema, scored_dir,
-        os.path.join(work_dir, "ck_scoring"), FEATURE_COLS,
+    run_bounded(
+        spark,
+        model_scoring_writer(
+            spark, gbt.model, feature_dir, frame.schema, scored_dir,
+            FEATURE_COLS,
+        ),
+        "pipeline_scoring",
     )
-
-    if not feat_q.awaitTermination(600):
-        feat_q.stop()
-        raise RuntimeError("feature stream did not terminate")
-    if not score_q.awaitTermination(600):
-        score_q.stop()
-        raise RuntimeError("scoring stream did not terminate")
 
     manifest["feature_stream"] = streaming_progress_summary(feat_q)
     manifest["feature_state_rows"] = (

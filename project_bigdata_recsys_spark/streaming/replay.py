@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from project_bigdata_recsys_spark.streaming.jobs import (
     bootstrapped_feature_stream,
     replay_events_stream,
+    run_bounded,
     stateful_feature_stream,
 )
 
@@ -32,58 +33,12 @@ BOOTSTRAP_SNAPSHOT = [
 ]
 
 
-#: Shuffle/state partition count pinned at STREAM START for replays whose
-#: keyed state is a bounded monitor sketch (first-digit counts, day- or
-#: window-grained counters, per-domain quotas — KB..MB of state at ANY
-#: corpus scale).  Structured Streaming fixes the state-store partition
-#: count to spark.sql.shuffle.partitions at query start, and the HDFS-
-#: backed provider pays a fixed per-partition commit (delta file + CRC)
-#: per micro-batch — measured 856-1082 ms/batch at 32 partitions vs
-#: 331-342 ms at 8 for a 9-key aggregation, pure fan-out overhead.  The
-#: right partition count tracks the STATE CARDINALITY (a fixed property
-#: of each query), not the session core count, so this is scale-honest:
-#: a 9-key digit histogram needs ≤ 9 state partitions on a 1000-executor
-#: cluster too.  Env-overridable for deployments whose monitor states
-#: are wider; corpus-scaled states (per-user, per-PK, dedup-key) and
-#: streams with join shuffles keep the session default.
-_SMALL_STATE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
-)
-
-
 def _run_replay(
     sdf, spark: SparkSession, mode: str, small_state: bool = False
 ) -> DataFrame:
     name = f"replay_{uuid.uuid4().hex[:12]}"
-    ck = os.path.join(scratch_dir(prefix="spark_ck_"), "ck")
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    if small_state:
-        # read once at stream start and pinned into the checkpoint's
-        # offsetSeqMetadata, so only the window around .start() matters
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(min(int(prev_sp), _SMALL_STATE_PARTITIONS)),
-        )
-    try:
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ck)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        if small_state:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-    terminated = q.awaitTermination(600)
-    if not terminated:
-        q.stop()
-        raise RuntimeError(
-            f"bounded replay {name} did not terminate — check that no "
-            "processing-time state TTL is armed (it forces no-data "
-            "micro-batches until every timeout fires)"
-        )
+    writer = sdf.writeStream.format("memory").outputMode(mode)
+    run_bounded(spark, writer, name, small_state=small_state)
     return _drain_sink(spark, name)
 
 
@@ -1640,16 +1595,9 @@ def stream_update_ann_index(
     def fold(batch_df, batch_id: int) -> None:
         update_ann_index(spark, index_dir, batch_df, n_tables, n_planes)
 
-    ck = os.path.join(scratch_dir(prefix="spark_ck_"), "ck")
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
+    run_bounded(
+        spark, stream.writeStream.foreachBatch(fold), "stream_update_ann_index"
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("bounded ANN-maintenance replay did not terminate")
 
     return _rp_index_profile(spark.read.parquet(index_dir))
 
@@ -1741,16 +1689,9 @@ def stream_ann_compaction(
     def fold(batch_df, batch_id: int) -> None:
         append_ann_index(spark, index_dir, batch_df, n_tables, n_planes)
 
-    ck = os.path.join(scratch_dir(prefix="spark_ck_"), "ck")
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
+    run_bounded(
+        spark, stream.writeStream.foreachBatch(fold), "stream_ann_compaction"
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("bounded ANN-maintenance replay did not terminate")
 
     compact_ann_index(spark, index_dir, target_rows_per_file=1_000_000)
     return _rp_index_profile(spark.read.parquet(index_dir))
@@ -1871,8 +1812,9 @@ def stream_zipf_fit(
             .parquet(ledger)
         )
 
-    _run_ledger_fold(
-        spark, stream, fold, "stream_zipf_fit", n_staged, small_state=True
+    run_bounded(
+        spark, stream.writeStream.foreachBatch(fold), "stream_zipf_fit",
+        min_commits=n_staged, small_state=True,
     )
     freqs = (
         spark.read.parquet(ledger)
@@ -1904,7 +1846,12 @@ def _staged_waves(
     collapsed each of those recomputes to a single task (guide §2.4 /
     §2.6 — n_waves serial full passes where one shuffle suffices);
     callers staging an expensive upstream (containment shingling,
-    sn_records, per-row md5 hashing) paid it n_waves times."""
+    sn_records, per-row md5 hashing) paid it n_waves times.
+
+    Callers fold through ``run_bounded(..., min_commits=n_staged)``,
+    with ``small_state=True`` when the per-wave partials are
+    vocab/histogram-bounded (a session-width reduce only multiplies
+    ledger files — guide §6); corpus-scaled appends keep the default."""
     import glob as _glob
     import shutil
     import time as _time
@@ -1948,63 +1895,6 @@ def _staged_waves(
     return work, stream, n_staged
 
 
-def _run_ledger_fold(
-    spark: SparkSession,
-    stream,
-    fold,
-    name: str,
-    n_waves: int,
-    small_state: bool = False,
-) -> None:
-    """Run an availableNow foreachBatch replay and enforce that at least
-    ``n_waves`` micro-batches committed (a Spark behavior change
-    collapsing them would silently weaken the gate to the batch form).
-
-    ``small_state`` pins the stream-cloned session's shuffle partitions
-    to ``_SMALL_STATE_PARTITIONS`` for the replay (the conf snapshot is
-    taken at ``.start()``): ledger folds have no state store, but their
-    per-wave partial aggregates are vocab/histogram-bounded, so a
-    session-width reduce fan-out only multiplies fold task count and
-    ledger file count (n_waves × partitions small files — guide §6) for
-    aggregates that fit in one.  Corpus-scaled folds (raw shingle or
-    fingerprint appends) keep the session default."""
-    ck = os.path.join(scratch_dir(prefix="spark_ck_"), "ck")
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    if small_state:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(min(int(prev_sp), _SMALL_STATE_PARTITIONS)),
-        )
-    try:
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        if small_state:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError(
-            f"{name}: availableNow replay did not finish in 600s"
-            + (f" (query error: {q.exception()})" if q.exception() else "")
-        )
-    n_commits = len(
-        [
-            f
-            for f in os.listdir(os.path.join(ck, "commits"))
-            if not f.startswith(".")
-        ]
-    )
-    if n_commits < n_waves:
-        raise AssertionError(
-            f"{name}: expected >={n_waves} micro-batch folds,"
-            f" got {n_commits} checkpoint commits"
-        )
-
-
 def stream_winnowing(
     spark: SparkSession, sf_dir: str, n_waves: int = 3
 ) -> DataFrame:
@@ -2045,7 +1935,10 @@ def stream_winnowing(
             return
         winnowing_fingerprints(batch_df).write.mode("append").parquet(ledger)
 
-    _run_ledger_fold(spark, stream, fold, "stream_winnowing", n_staged)
+    run_bounded(
+        spark, stream.writeStream.foreachBatch(fold), "stream_winnowing",
+        min_commits=n_staged,
+    )
     fps = spark.read.parquet(ledger)
     return winnowing_pairs_from_fps(fps)
 
@@ -2088,8 +1981,9 @@ def stream_skyline(
             return
         skyline_filter(batch_df).write.mode("append").parquet(ledger)
 
-    _run_ledger_fold(
-        spark, stream, fold, "stream_skyline", n_staged, small_state=True
+    run_bounded(
+        spark, stream.writeStream.foreachBatch(fold), "stream_skyline",
+        min_commits=n_staged, small_state=True,
     )
     merged = spark.read.parquet(ledger)
     return (
@@ -2134,8 +2028,9 @@ def stream_ipf(spark: SparkSession, sf_dir: str, n_waves: int = 3) -> DataFrame:
             .parquet(ledger)
         )
 
-    _run_ledger_fold(
-        spark, stream, fold, "stream_ipf", n_staged, small_state=True
+    run_bounded(
+        spark, stream.writeStream.foreachBatch(fold), "stream_ipf",
+        min_commits=n_staged, small_state=True,
     )
     cells = (
         spark.read.parquet(ledger)
@@ -2217,7 +2112,10 @@ def stream_golden_record(
             .parquet(pair_dir)
         )
 
-    _run_ledger_fold(spark, stream, fold, "stream_golden_record", n_staged)
+    run_bounded(
+        spark, stream.writeStream.foreachBatch(fold), "stream_golden_record",
+        min_commits=n_staged,
+    )
     edges = (
         spark.read.parquet(pair_dir)
         .filter(F.col("dist") <= link_dist)
@@ -2270,8 +2168,9 @@ def stream_bpe_vocab(
             .parquet(ledger)
         )
 
-    _run_ledger_fold(
-        spark, stream, fold, "stream_bpe_vocab", n_staged, small_state=True
+    run_bounded(
+        spark, stream.writeStream.foreachBatch(fold), "stream_bpe_vocab",
+        min_commits=n_staged, small_state=True,
     )
     words = (
         spark.read.parquet(ledger)
@@ -2325,8 +2224,9 @@ def stream_pr_auc(
             .parquet(ledger)
         )
 
-    _run_ledger_fold(
-        spark, stream, fold, "stream_pr_auc", n_staged, small_state=True
+    run_bounded(
+        spark, stream.writeStream.foreachBatch(fold), "stream_pr_auc",
+        min_commits=n_staged, small_state=True,
     )
     hist = (
         spark.read.parquet(ledger)
@@ -2376,7 +2276,10 @@ def stream_containment(
             return
         batch_df.write.mode("append").parquet(ledger)
 
-    _run_ledger_fold(spark, stream, fold, "stream_containment", n_staged)
+    run_bounded(
+        spark, stream.writeStream.foreachBatch(fold), "stream_containment",
+        min_commits=n_staged,
+    )
     return containment_from_shingles(spark.read.parquet(ledger))
 
 
@@ -2416,8 +2319,9 @@ def stream_containment_index(
             return
         update_containment_index(spark, batch_df, index_dir)
 
-    _run_ledger_fold(
-        spark, stream, fold, "stream_containment_index", n_staged
+    run_bounded(
+        spark, stream.writeStream.foreachBatch(fold), "stream_containment_index",
+        min_commits=n_staged,
     )
     return probe_containment_index(spark, index_dir)
 
@@ -2459,8 +2363,9 @@ def stream_mann_whitney(
             F.sum("treat").cast("long").alias("t1"),
         ).write.mode("append").parquet(ledger)
 
-    _run_ledger_fold(
-        spark, stream, fold, "stream_mann_whitney", n_staged, small_state=True
+    run_bounded(
+        spark, stream.writeStream.foreachBatch(fold), "stream_mann_whitney",
+        min_commits=n_staged, small_state=True,
     )
     hist = (
         spark.read.parquet(ledger)
@@ -2525,8 +2430,9 @@ def stream_skew_monitor(
             .parquet(ledger)
         )
 
-    _run_ledger_fold(
-        spark, stream, fold, "stream_skew_monitor", n_staged, small_state=True
+    run_bounded(
+        spark, stream.writeStream.foreachBatch(fold), "stream_skew_monitor",
+        min_commits=n_staged, small_state=True,
     )
     per_key = (
         spark.read.parquet(ledger)

@@ -633,3 +633,25 @@ def test_ivf_pq_exact_rerank_and_ceiling_invariant(spark):
     for r in prof:
         assert r.recall_ivf_pq <= r.cell_ceiling + 1e-9
         assert abs(r.uplift - (r.recall_ivf_pq - r.recall_pq)) < 1e-9
+
+
+def test_simhash_pairs_from_bands_equals_inline(spark):
+
+    from project_bigdata_recsys_spark.catalog import load_table
+    from project_bigdata_recsys_spark.functions.dedup import (
+        _simhash_pairs_from_bands,
+        shared_simhash_bands,
+        simhash_near_pairs_for,
+    )
+
+    docs = load_table(spark, SF_SMALL, "documents")
+    inline = set(
+        map(tuple, simhash_near_pairs_for(docs, sort=False).collect())
+    )
+    bands = spark.read.parquet(
+        shared_simhash_bands(spark, SF_SMALL)
+    ).select("doc_id", "simhash", "band_no", "k")
+    from_index = set(
+        map(tuple, _simhash_pairs_from_bands(bands).collect())
+    )
+    assert inline == from_index and len(inline) > 0

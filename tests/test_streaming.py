@@ -3,13 +3,21 @@ events table, stream results compared against batch equivalents."""
 
 from __future__ import annotations
 
+import ast
+import glob
 import os
+import time
 
+import pytest
+
+import project_bigdata_recsys_spark.streaming.jobs as J
+import project_bigdata_recsys_spark.streaming.replay as R
 from project_bigdata_recsys_spark.catalog import load_table
 from project_bigdata_recsys_spark.streaming.jobs import (
     batch_equivalent_features,
     recommendations_query,
     replay_events_stream,
+    run_bounded,
     session_aggregation,
     stateful_feature_stream,
     tumbling_rate,
@@ -17,23 +25,17 @@ from project_bigdata_recsys_spark.streaming.jobs import (
 from tests.conftest import SF_SMALL
 
 
-def _run_to_memory(sdf, name: str, tmpdir: str, mode: str) -> None:
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", os.path.join(tmpdir, f"ck_{name}"))
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
+def _run_to_memory(sdf, name: str, mode: str) -> None:
+    run_bounded(
+        sdf.sparkSession, sdf.writeStream.format("memory").outputMode(mode), name
     )
-    q.awaitTermination(180)
 
 
-def test_stateful_features_match_batch(spark, tmp_path):
+def test_stateful_features_match_batch(spark):
     """Stream/batch equivalence: after full replay, the stateful per-key
     counters equal the batch groupBy aggregate."""
     stream = stateful_feature_stream(replay_events_stream(spark, SF_SMALL))
-    _run_to_memory(stream, "feat_t", str(tmp_path), "update")
+    _run_to_memory(stream, "feat_t", "update")
     got = spark.sql(
         "SELECT user_id, event_type, max(n_events) AS n_events, "
         "max(total_value) AS total_value FROM feat_t GROUP BY 1, 2"
@@ -43,9 +45,9 @@ def test_stateful_features_match_batch(spark, tmp_path):
     assert want.exceptAll(got).count() == 0
 
 
-def test_tumbling_rate_counts(spark, tmp_path):
+def test_tumbling_rate_counts(spark):
     stream = tumbling_rate(replay_events_stream(spark, SF_SMALL))
-    _run_to_memory(stream, "rate_t", str(tmp_path), "append")
+    _run_to_memory(stream, "rate_t", "append")
     total = spark.sql("SELECT sum(n) AS s FROM rate_t").head().s
     n_events = load_table(spark, SF_SMALL, "events").count()
     # append mode holds back windows newer than the watermark; everything
@@ -54,9 +56,9 @@ def test_tumbling_rate_counts(spark, tmp_path):
     assert total >= n_events * 0.9
 
 
-def test_session_window_stream_runs(spark, tmp_path):
+def test_session_window_stream_runs(spark):
     stream = session_aggregation(replay_events_stream(spark, SF_SMALL))
-    _run_to_memory(stream, "sess_t", str(tmp_path), "append")
+    _run_to_memory(stream, "sess_t", "append")
     out = spark.table("sess_t")
     assert out.count() > 0
     bad = out.filter("session_end <= session_start").count()
@@ -67,7 +69,7 @@ def test_recommendations_topk(spark, tmp_path):
     q = recommendations_query(
         spark, SF_SMALL, str(tmp_path / "out"), str(tmp_path / "ck")
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     recs = spark.read.parquet(str(tmp_path / "out" / "batch=0"))
     per_user = recs.groupBy("user_id").count()
     assert per_user.filter("count > 5").count() == 0
@@ -113,7 +115,7 @@ def test_bootstrapped_features_equal_snapshot_plus_batch(spark, tmp_path):
     stream = bootstrapped_feature_stream(
         spark, SF_SMALL, snapshot, str(tmp_path / "staged")
     )
-    _run_to_memory(stream, "boot_t", str(tmp_path), "update")
+    _run_to_memory(stream, "boot_t", "update")
     got = spark.sql(
         "SELECT user_id, event_type, max(n_events) AS n_events, "
         "max(total_value) AS total_value FROM boot_t GROUP BY 1, 2"
@@ -379,3 +381,122 @@ def test_latest_document_sink(spark, tmp_path):
         .head()
     )
     assert some["last_event_id"] == w_max.event_id
+
+
+# --------------------------------------------------------------------------
+# run_bounded: the one bounded-stream runner (T8)
+# --------------------------------------------------------------------------
+def _one_file_stream(spark, tmp_path):
+    src = str(tmp_path / "src")
+    spark.range(4).coalesce(1).write.parquet(src)
+    return spark.readStream.schema("id long").parquet(src)
+
+
+def test_run_bounded_timeout_stops_query(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(J, "_BOUNDED_TIMEOUT_S", 1)
+
+    def slow_fold(_batch_df, _batch_id):
+        time.sleep(5)
+
+    writer = _one_file_stream(spark, tmp_path).writeStream.foreachBatch(slow_fold)
+    with pytest.raises(TimeoutError, match="bounded_slow_t"):
+        run_bounded(spark, writer, "bounded_slow_t")
+    assert not [q for q in spark.streams.active if q.name == "bounded_slow_t"]
+
+
+def test_run_bounded_min_commits(spark, tmp_path):
+    writer = _one_file_stream(spark, tmp_path).writeStream.foreachBatch(
+        lambda _df, _id: None
+    )
+    with pytest.raises(AssertionError, match="micro-batch commits"):
+        run_bounded(spark, writer, "bounded_commits_t", min_commits=2)
+
+
+def test_run_bounded_pin_restores_conf_on_start_error(spark, tmp_path):
+    # wider than _SMALL_STATE_PARTITIONS, so the pin really changes it
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "11")
+    # append mode on an unwatermarked aggregation fails at .start()
+    writer = (
+        _one_file_stream(spark, tmp_path)
+        .groupBy("id")
+        .count()
+        .writeStream.format("memory")
+        .outputMode("append")
+    )
+    try:
+        with pytest.raises(Exception):
+            run_bounded(spark, writer, "bounded_pin_t", small_state=True)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "11"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+
+
+def test_bounded_streams_awaited_only_in_runner():
+    """One way to run a bounded stream: awaitTermination is called only
+    by run_bounded and _run_replay_incremental (which keeps its own
+    processing-time trigger and row-count stop).  This also keeps the
+    pin's single-driver-thread contract checkable in one place."""
+    allowed = {
+        ("streaming/jobs.py", "run_bounded"),
+        ("streaming/replay.py", "_run_replay_incremental"),
+    }
+    pkg = os.path.dirname(os.path.dirname(J.__file__))
+    found = []
+
+    def visit(node, rel, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, rel, child.name)
+                continue
+            if isinstance(child, ast.Attribute) and child.attr == "awaitTermination":
+                found.append((rel, fn))
+            visit(child, rel, fn)
+
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        visit(tree, os.path.relpath(path, pkg).replace(os.sep, "/"), None)
+    assert found and set(found) <= allowed, sorted(set(found) - allowed)
+
+
+# --------------------------------------------------------------------------
+# small-state partition pin: bounded-state replays pin
+# spark.sql.shuffle.partitions at stream START to _SMALL_STATE_PARTITIONS.
+# The pin never leaks into the session conf (also when the stream errors),
+# and the state partition count is layout, not semantics.
+# --------------------------------------------------------------------------
+def _rows(df):
+    return [tuple(r) for r in df.collect()]
+
+
+def test_small_state_pin_restores_conf(spark):
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    R.stream_benford_values(spark, SF_SMALL).collect()
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_small_state_pin_restores_conf_on_error(spark, tmp_path):
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    src = str(tmp_path / "src")
+    spark.range(4).write.parquet(src)
+    stream = spark.readStream.schema("id long").parquet(src)
+    # append mode on an unwatermarked aggregation fails at .start() —
+    # inside the pinned window, so the restore must still run
+    with pytest.raises(Exception):
+        R._run_replay(
+            stream.groupBy("id").count(), spark, "append", small_state=True
+        )
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_small_state_result_identical_to_session_width(spark, monkeypatch):
+    pinned = _rows(R.stream_benford_values(spark, SF_SMALL))
+    # session fixture runs at shuffle_partitions=8, so disabling the pin
+    # means min(8, 8) -> widen the sentinel instead: pin to 2 and to the
+    # session width, results must agree exactly
+    monkeypatch.setattr(J, "_SMALL_STATE_PARTITIONS", 2)
+    narrow = _rows(R.stream_benford_values(spark, SF_SMALL))
+    monkeypatch.setattr(J, "_SMALL_STATE_PARTITIONS", 10_000)
+    wide = _rows(R.stream_benford_values(spark, SF_SMALL))
+    assert pinned == narrow == wide
