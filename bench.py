@@ -18,9 +18,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from project_bigdata_recsys_spark.caching import release_shared, release_tracked
-from project_bigdata_recsys_spark.plans.queries import QUERIES
+from project_bigdata_recsys_spark.caching import release_shared
 from project_bigdata_recsys_spark.session import get_spark
+from tools.harness import prepare_shared_tier, run_query, settle, warm_up
 
 HEADLINE = [
     "course_stats",
@@ -630,94 +630,17 @@ def record_session_bracket(
     }
 
 
-#: After these queries, the inter-query cache release is SKIPPED so a
-#: persist_shared frame survives into the immediately-following entry.
-_SHARE_WITH_NEXT = {
-    "item_pagerank",
-    "item_pagerank_personalized",
-    "item_triangles",
-}
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
-    # Settle wait: this box is shared and co-tenant load swings totals
-    # ~2x run-to-run, so give the host a bounded chance to go quiet
-    # before timing anything.  Both the wait and the load actually seen
-    # are recorded in the output line — the numbers stay honest either
-    # way; they just compare better when the wait succeeds.
-    settle_max = float(os.environ.get("SPARK_GRAFT_BENCH_SETTLE_SEC", "240"))
-    settle_load = float(os.environ.get("SPARK_GRAFT_BENCH_SETTLE_LOAD", "3.0"))
-    settle_wait = 0.0
-    while settle_wait < settle_max and os.getloadavg()[0] > settle_load:
-        time.sleep(5)
-        settle_wait += 5
+    # both the wait and the load actually seen are recorded in the output
+    # line: the numbers stay honest either way, they just compare better
+    # when the wait succeeds
+    settle_wait = settle()
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
-
-    # JVM/codegen warmup so per-query numbers measure the plan, not
-    # first-run compilation: one generic query, plus the RP-hash ANN
-    # family at the SMALLEST sf (their 24-projection HOF expressions
-    # cost seconds of Janino compile — a one-time cost that amortizes
-    # to nothing at 100 TB and would otherwise dominate a 2000-row
-    # query's number).  Warmup rows come from sf0.001, never the
-    # benched sf, so no benched data is pre-materialized.
-    QUERIES["label_histogram"](spark, sf_dir).collect()
-    warm_sf = "/root/testdata/sf0.001"
-    if os.path.isdir(warm_sf):
-        # simhash_near_pairs additionally warms the 64-bit-vote codegen
-        # the whole CC family (near_dup_clusters, cluster_aware_split,
-        # source_dup_attribution, split_source_audit) shares
-        for warm_q in ("knn_graph", "knn_ivf_lloyd", "simhash_near_pairs"):
-            QUERIES[warm_q](spark, warm_sf).collect()
-        release_tracked()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
-
-    # one-time index write for the production-form stream probe (a
-    # nightly job's output in the real contract) — built before timing
-    # so stream_semantic_dedup_probe measures the recurring probe cost
-    from project_bigdata_recsys_spark.functions.dedup import (
-        shared_components,
-        shared_simhash_bands,
-    )
-    from project_bigdata_recsys_spark.streaming.replay import (
-        prepare_semantic_index,
-    )
-
-    prepare_semantic_index(spark, sf_dir)
-    # same class of one-time state: the persisted simhash band index the
-    # incremental fold probes, and the parquet-backed CC labeling every
-    # _reused consumer loads (both a nightly job's output in production;
-    # r8 — the headline previously re-measured the labeling build 4x)
-    shared_simhash_bands(spark, sf_dir)
-    shared_components(spark, sf_dir).count()
-    # r10: the remaining parquet-backed shared artifacts joined the same
-    # contract — minhash signatures (minhash_candidates / band sweep)
-    # and the co-occurrence edge + oriented frames (pagerank, triangles,
-    # kcore, Adamic-Adar, Salton) are nightly graph/dedup build outputs;
-    # timed entries measure the recurring consumer cost against them
-    from project_bigdata_recsys_spark.functions.dedup import (
-        shared_minhash_signatures,
-    )
-    from project_bigdata_recsys_spark.functions.graph import (
-        shared_cooccurrence_edges,
-        shared_oriented_edges,
-    )
-
-    shared_minhash_signatures(spark, sf_dir).count()
-    shared_cooccurrence_edges(spark, sf_dir).count()
-    shared_oriented_edges(spark, sf_dir).count()
-    # r11: the unigram-LM doc-score kernel joined the memo contract —
-    # its two consumers (perplexity_buckets, domain_reweight) sit four
-    # entries apart, so the memory tier was silently rebuilt by the
-    # later one after the between-query block sweep
-    from project_bigdata_recsys_spark.functions.text import (
-        doc_unigram_scores,
-    )
-
-    doc_unigram_scores(spark, sf_dir).count()
+    warm_up(spark, sf_dir)
+    prepare_shared_tier(spark, sf_dir)
 
     # prior committed per-query numbers, read BEFORE this run overwrites
     # the detail file — the reference for the warm-retime adjudicator
@@ -733,26 +656,7 @@ def main() -> None:
     except (OSError, ValueError):
         pass
 
-    timings: dict[str, float] = {}
-    for name in HEADLINE:
-        t0 = time.time()
-        df = QUERIES[name](spark, sf_dir)
-        n = df.count() if name != "knn_brute_force" else len(df.collect())
-        _ = n
-        timings[name] = round(time.time() - t0, 3)
-        # Drop blocks the query pinned: persist()ed frames are registered
-        # via caching.persist_tracked and released scoped (no global
-        # clearCache — caller-owned caches would survive); the remaining
-        # sweep covers localCheckpoint blocks of the iterative operators
-        # (connected components), whose terminal frame the caller owns.
-        # Left in place they accumulate across the run and the heap
-        # pressure taxes every LATER query — the r2 bench measured a
-        # uniform ~1.8x drift on queries whose code hadn't changed.
-        # Cleanup time is charged between queries, not to any query.
-        if name not in _SHARE_WITH_NEXT:
-            release_tracked()
-            for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                rdd.unpersist()
+    timings = {name: run_query(spark, name, sf_dir)[1] for name in HEADLINE}
 
     # Warm-retime adjudicator (r13 verdict task #4): streaming-family
     # entries (ledger/checkpoint IO) bounce 2-3x run-to-run on this box
@@ -768,13 +672,7 @@ def main() -> None:
         t_prior = prior_timings.get(name)
         if not t_prior or t_first <= 2 * t_prior or t_first < 2.0:
             continue
-        t0 = time.time()
-        QUERIES[name](spark, sf_dir).count()
-        t_warm = round(time.time() - t0, 3)
-        if name not in _SHARE_WITH_NEXT:
-            release_tracked()
-            for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                rdd.unpersist()
+        t_warm = run_query(spark, name, sf_dir)[1]
         warm_retimes[name] = {
             "first": t_first,
             "warm": t_warm,
@@ -804,24 +702,11 @@ def main() -> None:
              "warm_retimes": warm_retimes},
             fh, indent=1,
         )
-    # cross-round anchor subsets: the r1 headline set and whatever
-    # earlier-round bench artifacts are on disk (shared-query sums are
-    # the only fair round-over-round comparison as the list grows)
+    # the r1 headline set: the cross-round ambient anchor
     anchors = {"r1_25": round(sum(timings[q] for q in HEADLINE[:25]), 3)}
     frozen_subset_total = round(
         sum(timings[q] for q in FROZEN_SUBSET if q in timings), 3
     )
-    for rnd in ("r05", "r01"):
-        try:
-            with open(f"BENCH_{rnd}.json") as fh:
-                prior = json.load(fh).get("parsed") or {}
-            shared = [q for q in prior.get("queries", {}) if q in timings]
-            if shared:
-                anchors[f"{rnd}_shared_{len(shared)}"] = round(
-                    sum(timings[q] for q in shared), 3
-                )
-        except (OSError, ValueError):
-            pass
     slowest = dict(
         sorted(timings.items(), key=lambda kv: -kv[1])[:10]
     )

@@ -340,22 +340,6 @@ def minhash_params(n_hashes: int = N_MINHASH) -> list[tuple[int, int]]:
     ]
 
 
-def minhash_signature(sh_col, n_hashes: int = N_MINHASH):
-    """Array of ``n_hashes`` minhash values over a shingle-array column.
-
-    Pure higher-order functions, one md5 per SHINGLE (not per shingle x
-    hash): base = md5-derived 32-bit value mod p computed once into a
-    bases array, then each of the n universal hashes is a multiply-mod
-    over that array — minwise hashing via a 2-universal family, the
-    textbook construction.  Zero shuffle, whole-stage codegen, no
-    HashingTF vectorization, no LSH model fit (the reference ML-pipeline
-    shape costs a full extra pass and is engine-seeded, i.e.
-    unverifiable).  Every value is data-derived, so the signature
-    reproduces exactly in DuckDB."""
-    bases = F.transform(sh_col, lambda s: hash32(s) % MINHASH_PRIME)
-    return _minhash_from_bases(bases, n_hashes)
-
-
 def _minhash_from_bases(bases_col, n_hashes: int = N_MINHASH):
     def _mh(a: int, b: int):
         return lambda x: (x * a + b) % MINHASH_PRIME
@@ -571,25 +555,6 @@ def simhash_features(
         )
         out = out + F.when(F.col(f"v{b}") > 0, weight).otherwise(F.lit(0).cast("long"))
     return votes.select(id_col, out.alias("simhash"))
-
-
-def simhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash fingerprint + 4x16-bit band keys per document.
-
-    Near-dup search at scale: self-join on each band key (4 equi-joins,
-    union, distinct) finds every pair within Hamming distance 3 of each
-    other with certainty (pigeonhole: ≤3 differing bits can't hit all 4
-    bands) — no pairwise scan.
-    """
-    docs = load_table(spark, sf_dir, "documents")
-    sh = simhash_features(docs)
-    out = sh
-    for band in range(4):
-        out = out.withColumn(
-            f"band{band}",
-            F.shiftrightunsigned(F.col("simhash"), band * 16).bitwiseAND(F.lit(0xFFFF)),
-        )
-    return out.orderBy("doc_id")
 
 
 def simhash_near_pairs(

@@ -87,11 +87,6 @@ def wide_sums(sf_dir: str | None = None) -> bool:
     return any(sf is None or sf > 1.0 for sf in _SEEN_SF.values())
 
 
-def scaled_long(col: Column, k: int) -> Column:
-    """Per-row fixed-point scaling: ``round(col * 10^k)`` as BIGINT."""
-    return F.round(col * (10**k)).cast("long")
-
-
 def sum_fixed(scaled: Column | str, sf_dir: str | None = None) -> Column:
     """Exact sum of an already-scaled fixed-point BIGINT column.
 

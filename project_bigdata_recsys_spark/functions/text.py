@@ -107,19 +107,6 @@ def lang_id(text: Column) -> Column:
     return result
 
 
-def with_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full text-analysis feature set to a documents DataFrame."""
-    c = F.col(text_col)
-    out = df
-    for name, col in quality_features(c).items():
-        out = out.withColumn(name, col)
-    return (
-        out.withColumn("fingerprint", fingerprint_sha(c))
-        .withColumn("rolling_fp", fingerprint_rolling(c))
-        .withColumn("lang_pred", lang_id(c))
-    )
-
-
 def doc_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document quality features, ordered by doc_id (oracle-checkable)."""
     docs = load_table(spark, sf_dir, "documents")

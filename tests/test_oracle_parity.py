@@ -4,37 +4,12 @@ check the driver runs, at sf0.001 for speed — the driver gate runs sf0.01).
 
 from __future__ import annotations
 
-import math
-
-import pandas as pd
 import pytest
 
 from project_bigdata_recsys_spark.plans.queries import ORACLES, QUERIES
 from tests.conftest import SF_SMALL
-
-
-def _normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    if len(df):
-        df = df.sort_values(by=list(df.columns), ignore_index=True)
-    return df
-
-
-def _eq(a, b) -> bool:
-    # EXACT float comparison — the driver hash-compares values exactly,
-    # and a relative tolerance here once hid a cent-level divergence for
-    # two rounds (tools/check_oracle.py has the same contract).
-    if a is None and b is None:
-        return True
-    if isinstance(a, float) or isinstance(b, float):
-        try:
-            af, bf = float(a), float(b)
-        except (TypeError, ValueError):
-            return False
-        if math.isnan(af) and math.isnan(bf):
-            return True
-        return af == bf
-    return a == b
+from tools.check_oracle import compare
+from tools.harness import release_query_state
 
 
 # ---------------------------------------------------------------------------
@@ -114,17 +89,10 @@ def test_oracle_parity(spark, duck, name):
     sdf = QUERIES[name](spark, SF_SMALL)
     _assert_no_unbounded_global_window(name, sdf)
     spark_pdf = sdf.toPandas()
+    release_query_state(spark)
     oracle_pdf = duck.execute(ORACLES[name]).fetchdf()
-    assert len(spark_pdf) == len(oracle_pdf), "row count mismatch"
-    assert sorted(spark_pdf.columns) == sorted(oracle_pdf.columns)
-    a, b = _normalize(spark_pdf), _normalize(oracle_pdf)
-    for col in a.columns:
-        mismatches = [
-            (i, x, y)
-            for i, (x, y) in enumerate(zip(a[col], b[col]))
-            if not _eq(x, y)
-        ]
-        assert not mismatches, f"col {col}: first mismatches {mismatches[:3]}"
+    # exact: check_oracle.TOLERANT_COLUMNS is empty
+    assert compare(name, spark_pdf, oracle_pdf) == []
 
 
 def test_all_oracle_keys_have_queries():
@@ -138,3 +106,4 @@ def test_rows_only_queries_run(spark):
         assert df.columns, name
         _assert_no_unbounded_global_window(name, df)
         df.count()
+        release_query_state(spark)

@@ -392,6 +392,13 @@ def _one_file_stream(spark, tmp_path):
     return spark.readStream.schema("id long").parquet(src)
 
 
+def _session_width(spark, n: int):
+    """Set the session's shuffle partitions; returns the previous value."""
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    return before
+
+
 def test_run_bounded_timeout_stops_query(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(J, "_BOUNDED_TIMEOUT_S", 1)
 
@@ -414,8 +421,7 @@ def test_run_bounded_min_commits(spark, tmp_path):
 
 def test_run_bounded_pin_restores_conf_on_start_error(spark, tmp_path):
     # wider than _SMALL_STATE_PARTITIONS, so the pin really changes it
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "11")
+    before = _session_width(spark, 11)
     # append mode on an unwatermarked aggregation fails at .start()
     writer = (
         _one_file_stream(spark, tmp_path)
@@ -471,32 +477,26 @@ def _rows(df):
 
 
 def test_small_state_pin_restores_conf(spark):
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    R.stream_benford_values(spark, SF_SMALL).collect()
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-
-
-def test_small_state_pin_restores_conf_on_error(spark, tmp_path):
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    src = str(tmp_path / "src")
-    spark.range(4).write.parquet(src)
-    stream = spark.readStream.schema("id long").parquet(src)
-    # append mode on an unwatermarked aggregation fails at .start() —
-    # inside the pinned window, so the restore must still run
-    with pytest.raises(Exception):
-        R._run_replay(
-            stream.groupBy("id").count(), spark, "append", small_state=True
-        )
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    # wider than _SMALL_STATE_PARTITIONS, so the pin really changes it
+    before = _session_width(spark, 11)
+    try:
+        R.stream_benford_values(spark, SF_SMALL).collect()
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "11"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
 
 
 def test_small_state_result_identical_to_session_width(spark, monkeypatch):
+    # the pin is min(session width, _SMALL_STATE_PARTITIONS): compare the
+    # pinned layout (8) with a narrower pin (2) and, with the pin lifted,
+    # a session wider than the pin (11) — results must agree exactly
     pinned = _rows(R.stream_benford_values(spark, SF_SMALL))
-    # session fixture runs at shuffle_partitions=8, so disabling the pin
-    # means min(8, 8) -> widen the sentinel instead: pin to 2 and to the
-    # session width, results must agree exactly
     monkeypatch.setattr(J, "_SMALL_STATE_PARTITIONS", 2)
     narrow = _rows(R.stream_benford_values(spark, SF_SMALL))
     monkeypatch.setattr(J, "_SMALL_STATE_PARTITIONS", 10_000)
-    wide = _rows(R.stream_benford_values(spark, SF_SMALL))
+    before = _session_width(spark, 11)
+    try:
+        wide = _rows(R.stream_benford_values(spark, SF_SMALL))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
     assert pinned == narrow == wide

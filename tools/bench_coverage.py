@@ -19,17 +19,14 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from project_bigdata_recsys_spark.caching import (  # noqa: E402
-    release_shared,
-    release_tracked,
-)
+from project_bigdata_recsys_spark.caching import release_shared  # noqa: E402
 from project_bigdata_recsys_spark.plans.queries import QUERIES  # noqa: E402
 from project_bigdata_recsys_spark.session import get_spark  # noqa: E402
+from tools.harness import run_query, warm_up  # noqa: E402
 
 #: Documented exact-oracle gate forms whose census cost at sf0.1 is
 #: dominated by a deliberately-unscalable construction (r10 census:
@@ -65,21 +62,15 @@ def main() -> None:
     ]
     spark = get_spark("bench-coverage")
     spark.sparkContext.setLogLevel("ERROR")
-    # same warmup discipline as bench.py: pay Janino codegen once
-    QUERIES["label_histogram"](spark, sf_dir).collect()
+    warm_up(spark, sf_dir)
 
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
     for name in targets:
-        t0 = time.time()
         try:
-            QUERIES[name](spark, sf_dir).count()
-            timings[name] = round(time.time() - t0, 3)
+            timings[name] = run_query(spark, name, sf_dir)[1]
         except Exception as exc:  # record, keep sweeping
             errors[name] = f"{type(exc).__name__}: {exc}"[:200]
-        release_tracked()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
     release_shared()
 
     out = {

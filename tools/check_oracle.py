@@ -5,24 +5,45 @@ at the given scale factor, then compares row count, column names/types, and
 order-insensitive values.  Run while iterating:
 
     python tools/check_oracle.py [sf_dir] [query ...]
+
+Evidence files (``SWEEP_r*`` full sweeps, ``PRECHECK_r*_gate`` gate-window
+checks) are written from the same run:
+
+    python tools/check_oracle.py [sf_dir] --out SWEEP_rN_full.json \
+        --what "end-of-round full-registry sweep" --note "after <change>"
+    python tools/check_oracle.py [sf_dir] --window \
+        --out PRECHECK_rN_gate.json --what "after the <wave> tail insertion"
+
+``--window`` checks the first 50 registry entries, the window the
+correctness gate checks.  The file's ``sum_mode`` is the
+``SPARK_GRAFT_SUM_DTYPE`` the run saw, so the decimal twin is the same
+command under ``SPARK_GRAFT_SUM_DTYPE=decimal``.  Exit status 1 on any
+failure.
 """
 
 from __future__ import annotations
 
+import argparse
+import datetime
+import json
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import pandas as pd
 
-from project_bigdata_recsys_spark.caching import release_shared, release_tracked
+from project_bigdata_recsys_spark.caching import release_shared
 from project_bigdata_recsys_spark.catalog import TABLES, table_path
+from project_bigdata_recsys_spark.functions.fixedpoint import wide_sums
 from project_bigdata_recsys_spark.plans.queries import ORACLES, QUERIES
 from project_bigdata_recsys_spark.session import get_spark
+from tools.harness import run_query
+
+#: The correctness gate checks this many leading registry entries.
+GATE_WINDOW = 50
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -101,62 +122,94 @@ def engine_versions(spark) -> dict:
     return versions
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+def sum_mode(sf_dir: str) -> str:
+    """The sum accumulator mode this run's queries were built under."""
+    mode = os.environ.get("SPARK_GRAFT_SUM_DTYPE", "auto")
+    if mode == "auto":
+        return f"auto ({'decimal' if wide_sums(sf_dir) else 'long'})"
+    return mode
 
-    spark = get_spark("oracle-check")
-    import json
 
-    print("VERSIONS " + json.dumps(engine_versions(spark), sort_keys=True))
+def check_queries(spark, sf_dir: str, names: list[str]) -> dict[str, dict]:
+    """Check ``names`` against their oracles, printing one line each;
+    returns per-query ``status``/``rows``/``sec``."""
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')"
         )
-
-    n_pass = n_fail = n_rows_only = 0
-    for name, fn in QUERIES.items():
-        if only and name not in only:
-            continue
-        t0 = time.time()
+    out: dict[str, dict] = {}
+    for name in names:
         try:
-            sdf = fn(spark, sf_dir)
-            spark_pdf = sdf.toPandas()
+            spark_pdf, sec = run_query(spark, name, sf_dir, "pandas")
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: spark error: {e}")
-            n_fail += 1
+            out[name] = {"status": "FAIL"}
             continue
-        elapsed = time.time() - t0
-        # scoped cache release between queries (same discipline as
-        # bench.py): 100+ queries share this session, and pinned
-        # signature frames / CC label checkpoints would otherwise
-        # accumulate across the whole run
-        release_tracked()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
+        entry = {"status": "ok", "rows": len(spark_pdf), "sec": round(sec, 1)}
+        out[name] = entry
         if name not in ORACLES:
-            print(f"rows  {name}: {len(spark_pdf)} rows (rows-only, {elapsed:.1f}s)")
-            n_rows_only += 1
+            entry["status"] = "rows-only"
+            print(f"rows  {name}: {len(spark_pdf)} rows (rows-only, {sec:.1f}s)")
             continue
         try:
-            oracle_pdf = con.execute(ORACLES[name]).fetchdf()
+            problems = compare(name, spark_pdf, con.execute(ORACLES[name]).fetchdf())
         except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {name}: oracle error: {e}")
-            n_fail += 1
-            continue
-        problems = compare(name, spark_pdf, oracle_pdf)
+            problems = [f"oracle error: {e}"]
         if problems:
-            print(f"FAIL  {name} ({elapsed:.1f}s):")
+            entry["status"] = "FAIL"
+            print(f"FAIL  {name} ({sec:.1f}s):")
             for p in problems:
                 print(f"      {p}")
-            n_fail += 1
         else:
-            print(f"ok    {name}: {len(spark_pdf)} rows ({elapsed:.1f}s)")
-            n_pass += 1
+            print(f"ok    {name}: {len(spark_pdf)} rows ({sec:.1f}s)")
+    return out
+
+
+def evidence(spark, sf_dir: str, names: list[str], what: str, note: str) -> dict:
+    """Run :func:`check_queries` and wrap its result in the evidence-file
+    layout of the committed ``SWEEP_r*``/``PRECHECK_r*`` files."""
+    queries = check_queries(spark, sf_dir, names)
+    statuses = [q["status"] for q in queries.values()]
+    return {
+        "what": what,
+        "sum_mode": sum_mode(sf_dir),
+        "sf_dir": sf_dir,
+        "date": datetime.date.today().isoformat(),
+        "result": (
+            f"{statuses.count('ok')} ok, {statuses.count('FAIL')} fail, "
+            f"{statuses.count('rows-only')} rows-only"
+        ),
+        "engine_versions": engine_versions(spark),
+        "queries": queries,
+        "note": note,
+    }
+
+
+def main() -> int:
+    p = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    p.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
+    p.add_argument("queries", nargs="*", help="only these (default: all)")
+    p.add_argument("--window", action="store_true",
+                   help=f"only the first {GATE_WINDOW} registry entries")
+    p.add_argument("--out", help="write the evidence JSON here")
+    p.add_argument("--what", default="local oracle check")
+    p.add_argument("--note", default="local replica of the correctness gate")
+    a = p.parse_args()
+    pool = list(QUERIES)[:GATE_WINDOW] if a.window else list(QUERIES)
+    names = [n for n in pool if not a.queries or n in a.queries]
+
+    spark = get_spark("oracle-check")
+    print("VERSIONS " + json.dumps(engine_versions(spark), sort_keys=True))
+    doc = evidence(spark, a.sf_dir, names, a.what, a.note)
     release_shared()
-    print(f"\n{n_pass} ok, {n_fail} fail, {n_rows_only} rows-only")
-    return 1 if n_fail else 0
+    print(f"\n{doc['result']}")
+    if a.out:
+        with open(a.out, "w") as fh:
+            json.dump(doc, fh, indent=1)
+            fh.write("\n")
+        print(f"wrote {a.out}")
+    return 1 if "FAIL" in {q["status"] for q in doc["queries"].values()} else 0
 
 
 if __name__ == "__main__":

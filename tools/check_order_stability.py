@@ -62,25 +62,20 @@ def value_hash(pdf) -> str:
 
 
 def worker(sf_dir: str, only: set[str], out_path: str) -> None:
-    from project_bigdata_recsys_spark.caching import (
-        release_shared,
-        release_tracked,
-    )
+    from project_bigdata_recsys_spark.caching import release_shared
     from project_bigdata_recsys_spark.plans.queries import QUERIES
     from project_bigdata_recsys_spark.session import get_spark
+    from tools.harness import run_query
 
     spark = get_spark("order-stability")
     results: dict[str, str] = {}
-    for name, fn in QUERIES.items():
+    for name in QUERIES:
         if only and name not in only:
             continue
         try:
-            results[name] = value_hash(fn(spark, sf_dir).toPandas())
+            results[name] = value_hash(run_query(spark, name, sf_dir, "pandas")[0])
         except Exception as e:  # noqa: BLE001
             results[name] = f"ERROR: {e}"
-        release_tracked()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
     release_shared()
     with open(out_path, "w") as fh:
         json.dump(results, fh, indent=1, sort_keys=True)

@@ -16,48 +16,12 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from project_bigdata_recsys_spark.caching import release_tracked
 from project_bigdata_recsys_spark.plans.queries import QUERIES
 from project_bigdata_recsys_spark.session import get_spark
-
-
-def _prep(spark, sf_dir: str) -> None:
-    """The same one-time shared-artifact prep bench.py performs before
-    timing (nightly-job outputs: CC labeling, band index, signatures,
-    edges, unigram memo) so probe numbers match bench conditions."""
-    from project_bigdata_recsys_spark.functions.dedup import (
-        shared_components,
-        shared_minhash_signatures,
-        shared_simhash_bands,
-    )
-    from project_bigdata_recsys_spark.functions.graph import (
-        shared_cooccurrence_edges,
-        shared_oriented_edges,
-    )
-    from project_bigdata_recsys_spark.functions.text import doc_unigram_scores
-    from project_bigdata_recsys_spark.streaming.replay import (
-        prepare_semantic_index,
-    )
-
-    QUERIES["label_histogram"](spark, sf_dir).collect()
-    warm_sf = "/root/testdata/sf0.001"
-    if os.path.isdir(warm_sf):
-        for warm_q in ("knn_graph", "knn_ivf_lloyd", "simhash_near_pairs"):
-            QUERIES[warm_q](spark, warm_sf).collect()
-        release_tracked()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
-    prepare_semantic_index(spark, sf_dir)
-    shared_simhash_bands(spark, sf_dir)
-    shared_components(spark, sf_dir).count()
-    shared_minhash_signatures(spark, sf_dir).count()
-    shared_cooccurrence_edges(spark, sf_dir).count()
-    shared_oriented_edges(spark, sf_dir).count()
-    doc_unigram_scores(spark, sf_dir).count()
+from tools.harness import prepare_shared_tier, release_query_state, run_query, warm_up
 
 
 def main() -> None:
@@ -66,11 +30,9 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("query-probe")
     spark.sparkContext.setLogLevel("ERROR")
-    if os.environ.get("SPARK_GRAFT_PROBE_NOPREP") != "1":
-        _prep(spark, sf_dir)
-    release_tracked()
-    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        rdd.unpersist()
+    warm_up(spark, sf_dir)
+    prepare_shared_tier(spark, sf_dir)
+    release_query_state(spark)
 
     if mode == "plan":
         df = QUERIES[name](spark, sf_dir)
@@ -87,20 +49,12 @@ def main() -> None:
         return
 
     reps = int(sys.argv[3]) if len(sys.argv) > 3 else 3
+    sink = "noop" if mode == "time" else "count"
     times = []
     for i in range(reps):
         spark.sparkContext.setJobDescription(f"probe:{name}#{i}")
-        t0 = time.time()
-        df = QUERIES[name](spark, sf_dir)
-        if mode == "time":
-            df.write.format("noop").mode("overwrite").save()
-        else:
-            df.count()
-        times.append(round(time.time() - t0, 3))
+        times.append(run_query(spark, name, sf_dir, sink)[1])
         spark.sparkContext.setJobDescription(None)
-        release_tracked()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
     print(f"{name} [{mode}] reps={times} min={min(times)} "
           f"median={sorted(times)[len(times)//2]}")
 

@@ -4,11 +4,10 @@ VERDICT r14 task 3: the 100-TB claims rest on per-operator design
 audits; this converts them to measurement at one decade of scale.  It
 times the 30-entry FROZEN_SUBSET (bench.py — the composition-stable
 comparison axis) twice in one session: at the driver's sf0.1 and at
-the 10x derived sf1 (tools/gen_scaledata.py), using bench.py's exact
-methodology — settle wait, codegen warmup at sf0.001, the
-nightly-build shared artifacts prepared per sf before timing, the same
-count()/collect() materialization, and the same inter-query cache
-release with the _SHARE_WITH_NEXT exemption.
+the 10x derived sf1 (tools/gen_scaledata.py), through bench.py's own
+harness (tools/harness.py): settle wait, codegen warmup at sf0.001, the
+shared tier prepared per sf before timing, the count sink, and the
+inter-query release.
 
 Interpretation contract (written into the artifact): rows grow 10x, so
 a perfectly linear operator shows ratio <= ~10 (usually well under —
@@ -32,10 +31,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import _SHARE_WITH_NEXT, FROZEN_SUBSET
-from project_bigdata_recsys_spark.caching import release_shared, release_tracked
-from project_bigdata_recsys_spark.plans.queries import QUERIES
+from bench import FROZEN_SUBSET
+from project_bigdata_recsys_spark.caching import release_shared
 from project_bigdata_recsys_spark.session import get_spark
+from tools.harness import WARM_SF, prepare_shared_tier, run_query, settle, warm_up
 
 SF01 = "/root/testdata/sf0.1"
 FLAG_RATIO = 15.0
@@ -58,52 +57,16 @@ EXTRA_SUBSET = [
 ]
 
 
-def _sweep(spark) -> None:
-    release_tracked()
-    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        rdd.unpersist()
-
-
-def _prepare_shared(spark, sf_dir: str) -> float:
-    """The nightly-build shared artifacts bench.py prepares before
-    timing (minus the semantic-dedup stream index — its sole consumer
-    is not in the frozen subset).  Returns the build wall time: at 10x
-    it is itself scale evidence for the shared tier."""
-    from project_bigdata_recsys_spark.functions.dedup import (
-        shared_components,
-        shared_minhash_signatures,
-        shared_simhash_bands,
-    )
-    from project_bigdata_recsys_spark.functions.graph import (
-        shared_cooccurrence_edges,
-        shared_oriented_edges,
-    )
-
-    t0 = time.time()
-    shared_simhash_bands(spark, sf_dir)
-    shared_components(spark, sf_dir).count()
-    shared_minhash_signatures(spark, sf_dir).count()
-    shared_cooccurrence_edges(spark, sf_dir).count()
-    shared_oriented_edges(spark, sf_dir).count()
-    return round(time.time() - t0, 3)
-
-
 def _time_subset(spark, sf_dir: str, names=None) -> tuple[dict, dict]:
     timings: dict[str, float] = {}
     rows: dict[str, int] = {}
     for name in (names or FROZEN_SUBSET):
-        t0 = time.time()
-        df = QUERIES[name](spark, sf_dir)
-        n = df.count() if name != "knn_brute_force" else len(df.collect())
-        timings[name] = round(time.time() - t0, 3)
-        rows[name] = n
+        rows[name], timings[name] = run_query(spark, name, sf_dir)
         print(
-            f"[probe {sf_dir}] {name}: {timings[name]}s {n} rows",
+            f"[probe {sf_dir}] {name}: {timings[name]}s {rows[name]} rows",
             file=sys.stderr,
             flush=True,
         )
-        if name not in _SHARE_WITH_NEXT:
-            _sweep(spark)
     return timings, rows
 
 
@@ -115,19 +78,13 @@ def main() -> None:
     out_path = sys.argv[2] if len(sys.argv) > 2 else os.path.join(
         repo, "SCALEPROBE_r16.json"
     )
-    settle_max, settle_load, settle_wait = 240.0, 3.0, 0.0
-    while settle_wait < settle_max and os.getloadavg()[0] > settle_load:
-        time.sleep(5)
-        settle_wait += 5
+    settle_wait = settle()
     load_start = os.getloadavg()[0]
     spark = get_spark("scale_probe")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # bench.py's codegen warmup, verbatim (sf0.001 — never a benched sf)
-    QUERIES["label_histogram"](spark, "/root/testdata/sf0.001").collect()
-    for warm_q in ("knn_graph", "knn_ivf_lloyd", "simhash_near_pairs"):
-        QUERIES[warm_q](spark, "/root/testdata/sf0.001").collect()
-    _sweep(spark)
+    # codegen warm-up on the warm-up sf, never a probed one
+    warm_up(spark, WARM_SF)
 
     result: dict = {
         "what": (
@@ -142,10 +99,10 @@ def main() -> None:
         "settle_wait_sec": settle_wait,
     }
 
-    result["prep_sec_sf0.1"] = _prepare_shared(spark, SF01)
+    result["prep_sec_sf0.1"] = prepare_shared_tier(spark, SF01)
     t01, r01 = _time_subset(spark, SF01)
     e01, er01 = _time_subset(spark, SF01, EXTRA_SUBSET)
-    result["prep_sec_sf1"] = _prepare_shared(spark, sf1_dir)
+    result["prep_sec_sf1"] = prepare_shared_tier(spark, sf1_dir)
     t1, r1 = _time_subset(spark, sf1_dir)
     e1, er1 = _time_subset(spark, sf1_dir, EXTRA_SUBSET)
     t01 = {**t01, **e01}; r01 = {**r01, **er01}
