@@ -584,6 +584,11 @@ def frozen_subset_verdict(
 #: starts clean (rotate it alongside _GATE_WINDOW).
 SESSION_LEDGER = "BENCH_LEDGER_r16.jsonl"
 
+#: The headline scale factor: the committed ledger and BENCH_DETAIL.json
+#: record sf0.1 runs only, so a run at any other sf (a smoke run) reads
+#: them but writes neither.
+HEADLINE_SF = 0.1
+
 
 def record_session_bracket(
     anchor: float,
@@ -592,9 +597,10 @@ def record_session_bracket(
     ambient_ok: bool,
     sf: float,
 ) -> dict:
-    """Append this run to the session ledger and summarize the in-band
-    bracket so far (same-sf runs only; out-of-band anchors are recorded
-    but excluded from the bracket — they measure the host)."""
+    """Append this run to the session ledger (headline-sf runs only) and
+    summarize the in-band bracket so far (same-sf runs only; out-of-band
+    anchors are recorded but excluded from the bracket — they measure
+    the host)."""
     path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), SESSION_LEDGER
     )
@@ -606,8 +612,9 @@ def record_session_bracket(
         "frozen_subset_ratio": frozen_ratio,
         "ambient_ok": ambient_ok,
     }
-    with open(path, "a") as fh:
-        fh.write(json.dumps(entry) + "\n")
+    if sf == HEADLINE_SF:
+        with open(path, "a") as fh:
+            fh.write(json.dumps(entry) + "\n")
     ratios = []
     with open(path) as fh:
         for line in fh:
@@ -642,14 +649,15 @@ def main() -> None:
     warm_up(spark, sf_dir)
     prepare_shared_tier(spark, sf_dir)
 
-    # prior committed per-query numbers, read BEFORE this run overwrites
-    # the detail file — the reference for the warm-retime adjudicator
-    prior_detail_path = os.path.join(
+    # prior committed per-query numbers, read BEFORE a headline-sf run
+    # overwrites the detail file — the reference for the warm-retime
+    # adjudicator
+    detail_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
     )
     prior_timings: dict[str, float] = {}
     try:
-        with open(prior_detail_path) as fh:
+        with open(detail_path) as fh:
             prior_doc = json.load(fh)
         if prior_doc.get("sf") == sf:
             prior_timings = prior_doc.get("queries", {}) or {}
@@ -692,16 +700,14 @@ def main() -> None:
     # "parsed": null because the 98-entry JSON line overflowed the
     # driver's bounded tail capture.  stdout gets ONE compact line —
     # totals, anchor subsets, the 10 slowest — sized to survive capture.
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-    )
-    with open(detail_path, "w") as fh:
-        json.dump(
-            {"metric": "headline_queries_total", "value": total,
-             "unit": "sec", "queries": timings, "sf": sf,
-             "warm_retimes": warm_retimes},
-            fh, indent=1,
-        )
+    if sf == HEADLINE_SF:
+        with open(detail_path, "w") as fh:
+            json.dump(
+                {"metric": "headline_queries_total", "value": total,
+                 "unit": "sec", "queries": timings, "sf": sf,
+                 "warm_retimes": warm_retimes},
+                fh, indent=1,
+            )
     # the r1 headline set: the cross-round ambient anchor
     anchors = {"r1_25": round(sum(timings[q] for q in HEADLINE[:25]), 3)}
     frozen_subset_total = round(

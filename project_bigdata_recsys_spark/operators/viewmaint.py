@@ -413,50 +413,30 @@ def join_view_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def stream_join_view_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin: the fact delta arrives as THREE md5-tercile
-    micro-batches (maxFilesPerTrigger=1 over a staged replay directory)
-    and every batch lands as an O(batch) parquet APPEND to the fact
-    ledger — the merge-on-read counterpart to stream_merge_apply's CoW
-    sink (writes pay there; reads pay here until reconcile).  The final
-    resolved profile shares join_view_mor's oracle verbatim: identical
-    end state whether the delta landed in one batch or three."""
-    from project_bigdata_recsys_spark.caching import scratch_dir
+    micro-batches (a staged replay, one file per tercile) and every
+    batch lands as an O(batch) parquet APPEND to the fact ledger — the
+    merge-on-read counterpart to stream_merge_apply's CoW sink (writes
+    pay there; reads pay here until reconcile).  The final resolved
+    profile shares join_view_mor's oracle verbatim: identical end state
+    whether the delta landed in one batch or three."""
     from project_bigdata_recsys_spark.catalog import load_table
     from project_bigdata_recsys_spark.sources.ingest import hash_uniform
-    from project_bigdata_recsys_spark.streaming.jobs import run_bounded
+    from project_bigdata_recsys_spark.streaming.jobs import run_staged_replay
 
     dirs = setup_join_view(spark, sf_dir, write_fact_ledger=False)
     os.makedirs(dirs["fact_ledger"], exist_ok=True)
-
-    replay = os.path.join(scratch_dir(prefix="spark_jv_replay_"), "files")
-    delta = fact_delta(spark, sf_dir).persist()
-    try:
-        u = hash_uniform(F.col("o_orderkey"), "jv-batch:")
-        for i, (lo, hi) in enumerate([(0.0, 1 / 3), (1 / 3, 2 / 3), (2 / 3, 1.01)]):
-            delta.filter((u >= lo) & (u < hi)).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(replay, f"b{i}"))
-    finally:
-        delta.unpersist()
-
-    stream = (
-        spark.readStream.schema(FACT_LEDGER_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(replay)
-    )
 
     def append_batch(batch_df: DataFrame, _batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         batch_df.write.mode("append").parquet(dirs["fact_ledger"])
 
-    # min_commits: maxFilesPerTrigger must actually have split the three
-    # replay files into three ledger appends
-    run_bounded(
+    run_staged_replay(
         spark,
-        stream.writeStream.foreachBatch(append_batch),
+        lambda s: s.writeStream.foreachBatch(append_batch),
         "stream_join_view_mor",
-        min_commits=3,
+        frame=fact_delta(spark, sf_dir),
+        wave=F.floor(hash_uniform(F.col("o_orderkey"), "jv-batch:") * 3),
     )
     resolved = resolve_join_view(
         spark,

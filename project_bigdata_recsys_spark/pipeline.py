@@ -43,8 +43,8 @@ from project_bigdata_recsys_spark.sources.ingest import (
     upsert_append,
 )
 from project_bigdata_recsys_spark.streaming.jobs import (
-    bootstrapped_feature_stream,
     model_scoring_writer,
+    run_bootstrapped_features,
     run_bounded,
     streaming_progress_summary,
 )
@@ -119,13 +119,8 @@ def run_full_pipeline(
         [(1, "click", 10, 100.0)],
         "user_id long, event_type string, n_events long, total_value double",
     )
-    feat_stream = bootstrapped_feature_stream(
-        spark, sf_dir, snapshot, os.path.join(work_dir, "replay_staging")
-    )
-    feat_q = run_bounded(
-        spark,
-        feat_stream.writeStream.format("memory").outputMode("update"),
-        "pipeline_features",
+    feat_q = run_bootstrapped_features(
+        spark, sf_dir, snapshot, "pipeline_features"
     )
 
     # ---- stage 4b: streamed model scoring (M8) over the training frame

@@ -197,7 +197,7 @@ def _make_feature_accumulator(ttl_ms: int | None):
 
     Seed rows (T4 bootstrap): a row whose ``props`` carries ``"seed_n"``
     contributes pre-aggregated history — n += seed_n, total += value —
-    instead of counting as one event.  See bootstrapped_feature_stream for
+    instead of counting as one event.  See bootstrap_seed_file for
     why bootstrap arrives in-band: PySpark's applyInPandasWithState has no
     initialState parameter (that is transformWithState's handleInitialState;
     transformWithStateInPandas exists in this PySpark but its Python
@@ -265,14 +265,10 @@ def stateful_feature_stream(events: DataFrame, ttl_ms: int | None = None) -> Dat
     )
 
 
-def stage_bootstrapped_replay(
-    spark: SparkSession, sf_dir: str, snapshot: DataFrame, work_dir: str
-) -> str:
-    """Stage a replay directory whose first file is the state snapshot
-    (T4): seed rows in the events schema, ``props`` carrying the
-    pre-aggregated count as ``{"seed_n": N}`` and ``value`` the running
-    total, followed by the real events file with a later mtime so the
-    file source replays seeds first.
+def bootstrap_seed_file(sf_dir: str, snapshot: DataFrame) -> str:
+    """Write the state snapshot (T4) as one parquet file of seed rows in
+    the events schema: ``props`` carries the pre-aggregated count as
+    ``{"seed_n": N}`` and ``value`` the running total.  Returns its path.
 
     This is the engine's bootstrap-from-snapshot (reference
     run_consumer.py:127-154 reloads its dict state from a CSV snapshot).
@@ -285,13 +281,9 @@ def stage_bootstrapped_replay(
     the snapshot as the first micro-batch gives identical semantics with
     checkpointable, replayable state.
     """
-    import shutil
-    import time as _time
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    os.makedirs(work_dir, exist_ok=True)
     snap_pdf = snapshot.toPandas()  # snapshot is small by contract (keyed state)
     n = len(snap_pdf)
     # The seed file must carry ts in the SAME physical type as the real
@@ -317,31 +309,34 @@ def stage_bootstrapped_replay(
             ),
         }
     )
-    seed_path = os.path.join(work_dir, "000_seed.parquet")
+    seed_path = os.path.join(
+        scratch_dir(prefix="spark_boot_seed_"), "seed.parquet"
+    )
     pq.write_table(seed_tbl, seed_path)
-    events_path = os.path.join(work_dir, "events.parquet")
-    shutil.copyfile(table_path(sf_dir, "events"), events_path)
-    now = _time.time()
-    os.utime(seed_path, (now - 100, now - 100))
-    os.utime(events_path, (now, now))
-    return work_dir
+    return seed_path
 
 
-def bootstrapped_feature_stream(
-    spark: SparkSession, sf_dir: str, snapshot: DataFrame, work_dir: str
-) -> DataFrame:
-    """Stateful feature stream with initial state from a snapshot (T4):
-    final counters equal snapshot ⊕ full-replay aggregation."""
+def run_bootstrapped_features(
+    spark: SparkSession, sf_dir: str, snapshot: DataFrame, name: str
+):
+    """Stateful feature stream with initial state from a snapshot (T4),
+    run to the memory sink ``name``: the seed file replays as the first
+    micro-batch, the events file as the second, so the final counters
+    equal snapshot ⊕ full-replay aggregation.  Returns the terminated
+    query."""
     from project_bigdata_recsys_spark.catalog import normalize_events
 
-    staged = stage_bootstrapped_replay(spark, sf_dir, snapshot, work_dir)
-    raw_schema = spark.read.parquet(table_path(sf_dir, "events")).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
+    return run_staged_replay(
+        spark,
+        lambda s: stateful_feature_stream(normalize_events(s))
+        .writeStream.format("memory")
+        .outputMode("update"),
+        name,
+        files=[
+            bootstrap_seed_file(sf_dir, snapshot),
+            table_path(sf_dir, "events"),
+        ],
     )
-    return stateful_feature_stream(normalize_events(stream))
 
 
 def batch_equivalent_features(events: DataFrame) -> DataFrame:
@@ -490,6 +485,96 @@ def run_bounded(
                 f" got {n_commits}"
             )
     return q
+
+
+def run_staged_replay(
+    spark: SparkSession,
+    to_writer,
+    name: str,
+    *,
+    files=(),
+    frame: DataFrame | None = None,
+    wave=None,
+    small_state: bool = False,
+):
+    """Stage a bounded replay's input as single parquet files in a pinned
+    order, stream them back one file per micro-batch and run
+    ``to_writer(stream)`` (sink, output mode or foreachBatch set) through
+    :func:`run_bounded` with a commit floor of one per staged file — the
+    one place a multi-file replay is staged (T8), so no replay can
+    silently collapse into one micro-batch and weaken its gate to the
+    batch form.  Returns the terminated query.
+
+    The input, in replay order, is ``files`` (parquet files, copied
+    byte-for-byte) followed by ``frame`` split on the integer column
+    ``wave`` (one file per non-empty wave, ascending); staggered mtimes
+    pin that order for the file source.  The stream schema is the
+    frame's (the first file's when there is no frame), never a
+    hand-typed literal; the file source reads every column as nullable.
+    Raises AssertionError when nothing is staged.
+
+    Staging the frame is ONE parallel job: ``repartition`` by the wave
+    column puts every wave entirely in one task (hash partitioning by
+    value — exactly one part file per wave directory), and a single
+    ``partitionBy`` write lands all waves.  A per-wave
+    ``filter(...).coalesce(1)`` loop would recompute the whole upstream
+    once per wave, each time in a single task (guide §2.4 / §2.6)."""
+    import glob
+    import shutil
+    import time
+
+    work = scratch_dir(prefix=f"spark_{name}_")
+    in_dir = os.path.join(work, "in")
+    os.makedirs(in_dir)
+    sources = list(files)
+    if frame is not None:
+        waves_dir = os.path.join(work, "waves")
+        (
+            frame.withColumn("_wv", wave.cast("int"))
+            .repartition("_wv")
+            .write.partitionBy("_wv")
+            .parquet(waves_dir)
+        )
+        # an empty wave writes no partition directory and is not staged
+        waves = sorted(
+            int(d[len("_wv="):])
+            for d in os.listdir(waves_dir)
+            if d.startswith("_wv=")
+        )
+        for wv in waves:
+            parts = glob.glob(
+                os.path.join(waves_dir, f"_wv={wv}", "part-*.parquet")
+            )
+            if len(parts) != 1:  # hash partitioning: 1 task per wave
+                raise AssertionError(
+                    f"{name}: wave {wv} staged as {len(parts)} files"
+                )
+            sources += parts
+    if not sources:
+        raise AssertionError(
+            f"{name}: every staged wave was empty — nothing to replay"
+        )
+    now = time.time()
+    for i, src in enumerate(sources):
+        staged = os.path.join(in_dir, f"{i:03d}.parquet")
+        shutil.copyfile(src, staged)
+        os.utime(staged, (now - 100 + i, now - 100 + i))
+    if frame is not None:
+        schema = frame.schema
+    else:
+        schema = spark.read.parquet(files[0]).schema
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(in_dir)
+    )
+    return run_bounded(
+        spark,
+        to_writer(stream),
+        name,
+        min_commits=len(sources),
+        small_state=small_state,
+    )
 
 
 def model_scoring_writer(

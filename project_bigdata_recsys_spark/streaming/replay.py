@@ -1,10 +1,18 @@
 """Streaming-replay query builders for the driver gate.
 
 Each runs a *real* Structured Streaming query (bounded with
-``trigger(availableNow=True)``) over the replayed events source, collects
-the final result from a memory sink, and returns it as a batch DataFrame —
-so the driver's DuckDB oracle can check streaming semantics exactly
-(stream/batch equivalence, SURVEY.md §5.2.3).
+``trigger(availableNow=True)``) over a replayed source and returns its
+result as a batch DataFrame — so the driver's DuckDB oracle can check
+streaming semantics exactly (stream/batch equivalence, SURVEY.md §5.2.3).
+
+Single-file replays stream the sf dir through ``replay_events_stream``
+into a memory sink (:func:`_run_replay`).  Multi-file replays — the
+cross-batch state, watermark and ledger-fold gates — stage their input
+through ``jobs.run_staged_replay``, which pins the file order, derives
+the stream schema from the input and asserts one micro-batch commit per
+staged file; :func:`_run_staged` drains such a replay's memory sink and
+:func:`_fold_to_ledger` runs the plain-append ledger fold, so a query
+supplies only its per-batch work and its readout.
 """
 
 from __future__ import annotations
@@ -17,9 +25,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from project_bigdata_recsys_spark.streaming.jobs import (
-    bootstrapped_feature_stream,
     replay_events_stream,
+    run_bootstrapped_features,
     run_bounded,
+    run_staged_replay,
     stateful_feature_stream,
 )
 
@@ -55,6 +64,60 @@ def _drain_sink(spark: SparkSession, name: str) -> DataFrame:
     spark.table(name).write.mode("overwrite").parquet(out)
     spark.catalog.dropTempView(name)
     return spark.read.parquet(out)
+
+
+def _run_staged(
+    spark: SparkSession, query, mode: str, *, small_state: bool = False,
+    **inputs,
+) -> DataFrame:
+    """:func:`_run_replay` over a staged multi-file replay: ``query`` maps
+    the staged stream to the frame whose rows land in the memory sink;
+    ``inputs`` are :func:`run_staged_replay`'s ``files``, ``frame`` and
+    ``wave``."""
+    name = f"replay_{uuid.uuid4().hex[:12]}"
+    run_staged_replay(
+        spark,
+        lambda s: query(s).writeStream.format("memory").outputMode(mode),
+        name,
+        small_state=small_state,
+        **inputs,
+    )
+    return _drain_sink(spark, name)
+
+
+def _fold_to_ledger(
+    spark: SparkSession,
+    name: str,
+    frame: DataFrame,
+    wave,
+    per_batch,
+    small_state: bool = False,
+) -> DataFrame:
+    """Replay ``frame`` split on ``wave`` and APPEND ``per_batch(batch)``
+    of every micro-batch to a parquet ledger — no state store, no
+    cross-batch shuffle, the cheapest streaming write — and return the
+    ledger scan for the post-replay merge.  The plain-append form of the
+    ledger-fold family; ``small_state=True`` when the per-wave partials
+    are vocab/histogram-bounded (a session-width reduce only multiplies
+    ledger files — guide §6), corpus-scaled appends keep the default."""
+    ledger = os.path.join(
+        scratch_dir(prefix=f"spark_{name}_ledger_"), "ledger"
+    )
+
+    def fold(batch_df: DataFrame, _batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        per_batch(batch_df).write.mode("append").parquet(ledger)
+
+    run_staged_replay(
+        spark,
+        lambda s: s.writeStream.foreachBatch(fold),
+        name,
+        frame=frame,
+        wave=wave,
+        small_state=small_state,
+    )
+    return spark.read.parquet(ledger)
 
 
 def _run_replay_incremental(
@@ -151,9 +214,9 @@ def stream_bootstrapped_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         BOOTSTRAP_SNAPSHOT,
         "user_id long, event_type string, n_events long, total_value double",
     )
-    work = scratch_dir(prefix="spark_boot_")
-    stream = bootstrapped_feature_stream(spark, sf_dir, snapshot, work)
-    table = _run_replay(stream, spark, "update")
+    name = f"replay_{uuid.uuid4().hex[:12]}"
+    run_bootstrapped_features(spark, sf_dir, snapshot, name)
+    table = _drain_sink(spark, name)
     return (
         table.groupBy("user_id", "event_type")
         .agg(
@@ -227,36 +290,21 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark (the streaming form of the batch dedup family in
     functions/dedup.py).  After the replay, per-type counts must equal
     the single-copy batch aggregate — which is what the oracle asserts."""
-    import os
-    import shutil
-    import time as _time
-
     from project_bigdata_recsys_spark.catalog import normalize_events, table_path
 
-    work = scratch_dir(prefix="spark_dedup_replay_")
-    src = table_path(sf_dir, "events")
-    f1 = os.path.join(work, "00_events.parquet")
-    f2 = os.path.join(work, "01_events_again.parquet")
-    shutil.copyfile(src, f1)
-    shutil.copyfile(src, f2)
-    now = _time.time()
-    os.utime(f1, (now - 100, now - 100))
-    os.utime(f2, (now, now))
+    def dedup_counts(stream: DataFrame) -> DataFrame:
+        deduped = (
+            normalize_events(stream)
+            .withWatermark("ts", "40 days")
+            .dropDuplicatesWithinWatermark(["event_id"])
+        )
+        return deduped.groupBy("event_type").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.round(F.sum("value"), 4).alias("total_value"),
+        )
 
-    raw_schema = spark.read.parquet(src).schema
-    stream = normalize_events(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(work)
-    )
-    deduped = stream.withWatermark("ts", "40 days").dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
-    agg = deduped.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.sum("value"), 4).alias("total_value"),
-    )
-    table = _run_replay(agg, spark, "complete")
+    src = table_path(sf_dir, "events")
+    table = _run_staged(spark, dedup_counts, "complete", files=[src, src])
     return table.orderBy("event_type")
 
 
@@ -767,61 +815,55 @@ def stream_late_data_audit(
 ) -> DataFrame:
     """Watermark ENFORCEMENT audit — the drop path no other streaming
     query exercises (stream_dedup_events sets a watermark wide enough to
-    keep everything): the events file replays as micro-batch 1, then a
-    deliberately LATE copy (every event shifted 40 days earlier, re-keyed)
-    arrives as micro-batch 2.  By then the watermark — advanced to
-    max(ts) − ``watermark_days`` at the end of batch 1 — is far past the
-    late copies' 1-day windows, so Structured Streaming must drop ALL of
-    them from the appended result; on-time windows emit exactly once.
+    keep everything): the events file replays as micro-batch 1, an
+    empty file as micro-batch 2, then a deliberately LATE copy (every
+    event shifted 40 days earlier, re-keyed) arrives as micro-batch 3.
+    Spark filters a batch's late rows against the watermark the
+    PREVIOUS batch ran under, so the empty trigger is what carries the
+    watermark batch 1 set — max(ts) − ``watermark_days`` — to the late
+    batch's filter.  That watermark is far past the late copies' 1-day
+    windows, so Structured Streaming must drop ALL of them from the
+    appended result; on-time windows emit exactly once.
 
     Three disjoint fates, all audited: EMITTED (on-time rows in windows
     the final watermark closed), WITHHELD (on-time rows in the trailing
     ``watermark_days`` of windows — still open in state when the bounded
     replay terminates; append mode never force-emits them), and DROPPED
     (every late copy — its window closed long before the row arrived).
-    Deterministic because file order is pinned (mtimes),
-    maxFilesPerTrigger=1 advances the watermark between the two batches,
-    and the final watermark (max on-time ts − delay) falls mid-day so no
-    window-end ties it.  The oracle replays the same watermark
-    arithmetic on the on-time aggregate."""
-    import shutil
-    import time as _time
+    Deterministic because the staged replay pins the file order and
+    runs one file per micro-batch, and the final watermark (max on-time
+    ts − delay) falls mid-day so no window-end ties it.  The oracle
+    replays the same watermark arithmetic on the on-time aggregate."""
+    import pyarrow.parquet as pq
 
     from project_bigdata_recsys_spark.catalog import (
         normalize_events,
         table_path,
     )
 
-    work = scratch_dir(prefix="spark_late_audit_")
     src = table_path(sf_dir, "events")
-    on_time = os.path.join(work, "00_events.parquet")
-    shutil.copyfile(src, on_time)
-    # late copies: shifted 40 days into the past, re-keyed
-    late_dir = os.path.join(work, "01_late.parquet")
     raw = spark.read.parquet(src)
+    # late copies: shifted 40 days into the past, re-keyed
     late = raw.withColumn(
         "ts", F.col("ts") - F.expr("INTERVAL 40 DAYS")
     ).withColumn("event_id", F.col("event_id") + F.lit(10_000_000))
-    late.coalesce(1).write.mode("overwrite").parquet(late_dir)
-    now = _time.time()
-    os.utime(on_time, (now - 100, now - 100))
-    for root, _dirs, files in os.walk(late_dir):
-        for f in files:
-            os.utime(os.path.join(root, f), (now, now))
-
-    raw_schema = raw.schema
-    stream = normalize_events(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(work)
+    idle = os.path.join(
+        scratch_dir(prefix="spark_late_idle_"), "idle.parquet"
     )
-    agg = (
-        stream.withWatermark("ts", f"{watermark_days} days")
+    pq.write_table(pq.read_schema(src).empty_table(), idle)
+    table = _run_staged(
+        spark,
+        lambda s: normalize_events(s)
+        .withWatermark("ts", f"{watermark_days} days")
         .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
+        .agg(F.count(F.lit(1)).alias("n")),
+        "append",
+        small_state=True,
+        files=[src, idle],
+        frame=late,
+        wave=F.lit(0),
     )
-    table = _run_replay(agg, spark, "append", small_state=True)
-    on_time_events = normalize_events(spark.read.parquet(on_time))
+    on_time_events = normalize_events(raw)
     # late windows are 40 days older than any on-time window (the shift
     # exceeds the corpus span), so sink rows split cleanly: anything in
     # a pre-on-time window is a late row that LEAKED past the watermark.
@@ -887,11 +929,10 @@ def stream_domain_quota(
 
     True CROSS-BATCH state is exercised, not simulated: the corpus is
     staged as ``n_waves`` single-file parquet waves (wave = doc_id %
-    n_waves) with staggered mtimes, and ``maxFilesPerTrigger=1`` makes
-    the file source replay them as a deterministic micro-batch
-    SEQUENCE — a domain saturated in wave 0 must reject in wave 2,
-    which only works if its counter survived two checkpointed state
-    round-trips.  Within a (batch, domain) group rows are processed in
+    n_waves) that the staged replay streams back as a deterministic
+    micro-batch SEQUENCE — a domain saturated in wave 0 must reject in
+    wave 2, which only works if its counter survived two checkpointed
+    state round-trips.  Within a (batch, domain) group rows are processed in
     md5(doc_id)-rank order, so the full admission order is (wave, md5,
     doc_id) — deterministic on both engines, which is what the SQL
     oracle replays with one ranked window.
@@ -920,15 +961,6 @@ def stream_domain_quota(
     dom = docs.withColumn(
         "domain_idx",
         F.floor(u * u * F.lit(float(n_domain_buckets))).cast("long"),
-    )
-
-    work, stream, _n_staged = _staged_waves(
-        spark,
-        dom,
-        "doc_id",
-        "doc_id long, source string, domain_idx long",
-        n_waves,
-        "spark_domain_quota_",
     )
 
     out_schema = StructType(
@@ -967,14 +999,20 @@ def stream_domain_quota(
             }
         )
 
-    decided = stream.groupBy("domain_idx").applyInPandasWithState(
-        admit,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    table = _run_staged(
+        spark,
+        lambda s: s.groupBy("domain_idx").applyInPandasWithState(
+            admit,
+            outputStructType=out_schema,
+            stateStructType=state_schema,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        ),
+        "update",
+        small_state=True,
+        frame=dom,
+        wave=F.col("doc_id") % n_waves,
     )
-    table = _run_replay(decided, spark, "update", small_state=True)
     return (
         table.groupBy("source")
         .agg(
@@ -1004,8 +1042,8 @@ def stream_kmv_distinct(
     property carries over to the stream).
 
     True cross-batch state: the corpus is staged as ``n_waves``
-    mtime-ordered single-file waves (event_id % n_waves) replayed with
-    maxFilesPerTrigger=1, so a week's sketch must survive checkpointed
+    single-file waves (event_id % n_waves) replayed one per micro-batch,
+    so a week's sketch must survive checkpointed
     state round-trips between merges.  Update-mode emissions carry a
     per-key update counter; the post-sink read keeps each week's last
     emission (latest-wins window) — the stream_cdc_current discipline.
@@ -1038,15 +1076,6 @@ def stream_kmv_distinct(
     )
     hashed = ev.select(
         "week", "event_id", hash_uniform(F.col("user_id"), "kmv:").alias("u")
-    )
-
-    work, stream, _n_staged = _staged_waves(
-        spark,
-        hashed,
-        "event_id",
-        "week string, event_id long, u double",
-        n_waves,
-        "spark_kmv_stream_",
     )
 
     out_schema = StructType(
@@ -1082,14 +1111,20 @@ def stream_kmv_distinct(
             }
         )
 
-    folded = stream.groupBy("week").applyInPandasWithState(
-        fold,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    table = _run_staged(
+        spark,
+        lambda s: s.groupBy("week").applyInPandasWithState(
+            fold,
+            outputStructType=out_schema,
+            stateStructType=state_schema,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        ),
+        "update",
+        small_state=True,
+        frame=hashed,
+        wave=F.col("event_id") % n_waves,
     )
-    table = _run_replay(folded, spark, "update", small_state=True)
     w_last = W.partitionBy("week").orderBy(F.desc("upd"))
     latest = (
         table.withColumn("__rn", F.row_number().over(w_last))
@@ -1343,16 +1378,9 @@ def stream_bootstrap_ci(
         F.sum(w).cast("long").alias("sw"),
         F.sum(w * F.col("vc")).cast("long").alias("swv"),
     )
-    # the memory-sink frame is self-join-hostile (conflicting attribute
-    # ids when point and sums meet again in the readout join) — break
-    # lineage through a KB-scale scratch parquet (#segments × (B+1)
-    # rows), the parquet-backed-memo discipline
-    sink = _run_replay(agg, spark, "complete", small_state=True)
-    state_dir = os.path.join(
-        scratch_dir(prefix="spark_boot_state_"), "state"
-    )
-    sink.write.mode("overwrite").parquet(state_dir)
-    table = spark.read.parquet(state_dir)
+    # the drained sink is a fresh parquet scan, so point and sums can
+    # meet again in the readout join (_drain_sink)
+    table = _run_replay(agg, spark, "complete", small_state=True)
     point = table.filter(F.col("b") == -1).select(
         "event_type",
         F.col("sw").alias("n"),
@@ -1383,21 +1411,18 @@ def stream_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = events.groupBy(
         F.window("ts", "1 day").alias("w"), "event_type"
     ).agg(F.count(F.lit(1)).alias("n"))
+    # the shared kernel self-joins its input (totals ⋈ daily): the
+    # drained sink is a fresh parquet scan, safe to self-join
     sink = _run_replay(agg, spark, "complete", small_state=True)
-    # the shared kernel self-joins its input (totals ⋈ daily); memory-
-    # sink frames conflict on attribute ids there — break lineage
-    # through a day-level scratch parquet (#days × #segments rows)
-    state_dir = os.path.join(
-        scratch_dir(prefix="spark_cusum_state_"), "state"
+    return cusum_from_counts(
+        sink.select(
+            "event_type",
+            F.floor(F.col("w.start").cast("double") / 86400.0)
+            .cast("long")
+            .alias("day"),
+            F.col("n").cast("long").alias("y"),
+        )
     )
-    sink.select(
-        "event_type",
-        F.floor(F.col("w.start").cast("double") / 86400.0)
-        .cast("long")
-        .alias("day"),
-        F.col("n").cast("long").alias("y"),
-    ).write.mode("overwrite").parquet(state_dir)
-    return cusum_from_counts(spark.read.parquet(state_dir))
 
 
 def stream_benford_values(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1482,14 +1507,10 @@ def stream_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("day"),
     ).agg(F.count(F.lit(1)).alias("y"))
+    # the kernel reads the count frame on BOTH sides of its grid join:
+    # the drained sink is a fresh parquet scan, safe to self-join
     table = _run_replay(daily, spark, "complete", small_state=True)
-    # the kernel reads the count frame on BOTH sides of its grid join —
-    # memory-sink frames conflict with themselves there; break lineage
-    # through a KB-scale scratch parquet (the stream_bootstrap_ci
-    # discipline)
-    state_dir = os.path.join(scratch_dir(prefix="spark_holt_state_"), "state")
-    table.write.mode("overwrite").parquet(state_dir)
-    counts = spark.read.parquet(state_dir).select(
+    counts = table.select(
         "event_type", "day", F.col("y").cast("long").alias("y")
     )
     return holt_eval_from_counts(counts)
@@ -1513,12 +1534,66 @@ def stream_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("day"),
     ).agg(F.count(F.lit(1)).alias("y"))
     table = _run_replay(daily, spark, "complete", small_state=True)
-    state_dir = os.path.join(scratch_dir(prefix="spark_mk_state_"), "state")
-    table.write.mode("overwrite").parquet(state_dir)
-    counts = spark.read.parquet(state_dir).select(
+    counts = table.select(
         "event_type", "day", F.col("y").cast("long").alias("y")
     )
     return mann_kendall_from_counts(counts)
+
+
+def _ann_maintenance(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    fold_into,
+    split_frac: float,
+    n_tables: int,
+    n_planes: int,
+    n_arrival_files: int,
+) -> str:
+    """The setup both ANN-maintenance queries share: build the nightly
+    RP-LSH base index over the settled corpus (the first ``split_frac``
+    of vec_ids), stream the remaining embeddings as ``n_arrival_files``
+    waves and fold every micro-batch into the index with
+    ``fold_into(spark, index_dir, batch_df, n_tables, n_planes)``.
+    Returns the index directory."""
+    from project_bigdata_recsys_spark.catalog import table_path
+    from project_bigdata_recsys_spark.functions.similarity import rp_index_rows
+
+    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    index_dir = os.path.join(
+        scratch_dir(prefix=f"spark_{name}_index_"), "ann_index"
+    )
+
+    # production-faithful split: the nightly index covers ~split_frac of
+    # the corpus (one batch build, the cheap path); the stream folds
+    # only the tail.  The oracle hashes the FULL corpus, so the split
+    # point is free — it just decides how much work runs as a stream.
+    max_vec = emb.agg(F.max("vec_id").alias("m")).collect()[0]["m"]
+    # empty corpus: max is NULL — build an empty base (the staged
+    # replay then raises: there is nothing to stream)
+    split_at = int(max_vec * split_frac) if max_vec is not None else 0
+
+    # nightly base index over the settled corpus (own scratch copy —
+    # the fold MUTATES it; never point this at the shared
+    # prepare_semantic_index memo other queries probe).  Clustered on
+    # the partition key first: one file per (t, bucket) dir (guide §6)
+    rp_index_rows(
+        emb.filter(F.col("vec_id") < split_at), n_tables, n_planes
+    ).repartition("t", "bucket").write.mode("overwrite").partitionBy(
+        "t", "bucket"
+    ).parquet(index_dir)
+
+    def fold(batch_df, batch_id: int) -> None:
+        fold_into(spark, index_dir, batch_df, n_tables, n_planes)
+
+    run_staged_replay(
+        spark,
+        lambda s: s.writeStream.foreachBatch(fold),
+        name,
+        frame=emb.filter(F.col("vec_id") >= split_at),
+        wave=F.col("vec_id") % n_arrival_files,
+    )
+    return index_dir
 
 
 def stream_update_ann_index(
@@ -1545,60 +1620,22 @@ def stream_update_ann_index(
     exactly what the oracle recomputes: the returned per-table profile
     (row/vector/bucket counts + an integer membership checksum) must
     match DuckDB hashing ALL vectors with the same deterministic
-    Rademacher planes.  Arrivals are written as ``n_arrival_files``
-    files and replayed with ``maxFilesPerTrigger=1`` so the fold runs
-    across several real micro-batches, not one.
+    Rademacher planes.  Arrivals are staged as ``n_arrival_files``
+    waves (vec_id % n_arrival_files) and replayed one per micro-batch,
+    so the fold runs across several real micro-batches, not one.
 
     Composes two oracle-green pieces: the update_ann_index fold
     (fold ≡ rebuild pinned by test_update_ann_index_equals_rebuild) and
     the deterministic bucket expressions ann_recall_profile's oracle
     already mirrors in SQL."""
-    from project_bigdata_recsys_spark.catalog import table_path
     from project_bigdata_recsys_spark.functions.similarity import (
-        rp_index_rows,
         update_ann_index,
     )
 
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
-    work = scratch_dir(prefix="spark_stream_ann_update_")
-    index_dir = os.path.join(work, "ann_index")
-    arrivals_dir = os.path.join(work, "arrivals")
-
-    # production-faithful split: the nightly index covers ~split_frac of
-    # the corpus (one batch build, the cheap path); the stream folds
-    # only the tail.  The oracle hashes the FULL corpus, so the split
-    # point is free — it just decides how much work runs as a stream.
-    max_vec = emb.agg(F.max("vec_id").alias("m")).collect()[0]["m"]
-    # empty corpus: max is NULL — build an empty base and stream nothing
-    split_at = int(max_vec * split_frac) if max_vec is not None else 0
-
-    # nightly base index over the settled corpus (own scratch copy —
-    # the fold MUTATES it; never point this at the shared
-    # prepare_semantic_index memo other queries probe).  Clustered on
-    # the partition key first: one file per (t, bucket) dir (guide §6)
-    rp_index_rows(
-        emb.filter(F.col("vec_id") < split_at), n_tables, n_planes
-    ).repartition("t", "bucket").write.mode("overwrite").partitionBy(
-        "t", "bucket"
-    ).parquet(index_dir)
-
-    emb.filter(F.col("vec_id") >= split_at).repartition(
-        n_arrival_files
-    ).write.parquet(arrivals_dir)
-
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals_dir)
+    index_dir = _ann_maintenance(
+        spark, sf_dir, "stream_update_ann_index", update_ann_index,
+        split_frac, n_tables, n_planes, n_arrival_files,
     )
-
-    def fold(batch_df, batch_id: int) -> None:
-        update_ann_index(spark, index_dir, batch_df, n_tables, n_planes)
-
-    run_bounded(
-        spark, stream.writeStream.foreachBatch(fold), "stream_update_ann_index"
-    )
-
     return _rp_index_profile(spark.read.parquet(index_dir))
 
 
@@ -1653,46 +1690,15 @@ def stream_ann_compaction(
     Reference analog: the factor-table sink kept queryable over time
     (spark_jobs/batch_als_train.py:236-248) — here the maintained
     artifact is the ANN index relation itself."""
-    from project_bigdata_recsys_spark.catalog import table_path
     from project_bigdata_recsys_spark.functions.similarity import (
         append_ann_index,
         compact_ann_index,
-        rp_index_rows,
     )
 
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
-    work = scratch_dir(prefix="spark_stream_ann_compact_")
-    index_dir = os.path.join(work, "ann_index")
-    arrivals_dir = os.path.join(work, "arrivals")
-
-    max_vec = emb.agg(F.max("vec_id").alias("m")).collect()[0]["m"]
-    split_at = int(max_vec * split_frac) if max_vec is not None else 0
-
-    # cluster on the partition key first: bounds the base-index layout
-    # at one file per (t, bucket) dir instead of tasks × dirs (guide §6)
-    rp_index_rows(
-        emb.filter(F.col("vec_id") < split_at), n_tables, n_planes
-    ).repartition("t", "bucket").write.mode("overwrite").partitionBy(
-        "t", "bucket"
-    ).parquet(index_dir)
-
-    emb.filter(F.col("vec_id") >= split_at).repartition(
-        n_arrival_files
-    ).write.parquet(arrivals_dir)
-
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals_dir)
+    index_dir = _ann_maintenance(
+        spark, sf_dir, "stream_ann_compaction", append_ann_index,
+        split_frac, n_tables, n_planes, n_arrival_files,
     )
-
-    def fold(batch_df, batch_id: int) -> None:
-        append_ann_index(spark, index_dir, batch_df, n_tables, n_planes)
-
-    run_bounded(
-        spark, stream.writeStream.foreachBatch(fold), "stream_ann_compaction"
-    )
-
     compact_ann_index(spark, index_dir, target_rows_per_file=1_000_000)
     return _rp_index_profile(spark.read.parquet(index_dir))
 
@@ -1769,11 +1775,11 @@ def stream_zipf_fit(
     DuckDB oracle text then prove the whole pipeline, not just the
     counts.
 
-    The corpus is staged as ``n_waves`` mtime-ordered single-file waves
-    (doc_id % n_waves) replayed with maxFilesPerTrigger=1; the
-    checkpoint commit count enforces that >= n_waves micro-batches
-    actually ran (a Spark behavior change collapsing them would
-    silently weaken this gate to the batch form).
+    The corpus is staged as ``n_waves`` single-file waves (doc_id %
+    n_waves) replayed one per micro-batch; the staged replay's commit
+    floor enforces that every wave ran as its own micro-batch (a Spark
+    behavior change collapsing them would silently weaken this gate to
+    the batch form).
 
     Scale: the ledger holds one partial-count row set per (batch,
     lang, token) — bounded by batches × |vocab|; a nightly compaction
@@ -1788,111 +1794,24 @@ def stream_zipf_fit(
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text"
     )
-    work, stream, n_staged = _staged_waves(
+    partials = _fold_to_ledger(
         spark,
+        "stream_zipf_fit",
         docs,
-        "doc_id",
-        "doc_id long, lang string, text string",
-        n_waves,
-        "spark_zipf_stream_",
-    )
-    ledger = os.path.join(work, "ledger")
-
-    def fold(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        (
-            batch_df.select(
-                "lang", F.explode(tokens(F.col("text"))).alias("token")
-            )
-            .filter(F.length("token") > 0)
-            .groupBy("lang", "token")
-            .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-            .write.mode("append")
-            .parquet(ledger)
+        F.col("doc_id") % n_waves,
+        lambda b: b.select(
+            "lang", F.explode(tokens(F.col("text"))).alias("token")
         )
-
-    run_bounded(
-        spark, stream.writeStream.foreachBatch(fold), "stream_zipf_fit",
-        min_commits=n_staged, small_state=True,
+        .filter(F.length("token") > 0)
+        .groupBy("lang", "token")
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt")),
+        small_state=True,
     )
     freqs = (
-        spark.read.parquet(ledger)
-        .groupBy("lang", "token")
+        partials.groupBy("lang", "token")
         .agg(F.sum("cnt").cast("long").alias("freq"))
     )
     return zipf_fit_from_freqs(freqs)
-
-
-def _staged_waves(
-    spark: SparkSession,
-    df: DataFrame,
-    key_col: str,
-    schema: str,
-    n_waves: int,
-    prefix: str,
-):
-    """Stage ``df`` as n_waves mtime-ordered single-file parquet waves
-    (``key % n_waves``) and open a maxFilesPerTrigger=1 file stream over
-    them — the shared harness of the ledger-fold family
-    (stream_zipf_fit, stream_winnowing, stream_skyline).
-
-    Staging is ONE parallel job: the wave number becomes a partition
-    column, ``repartition`` by it puts every wave entirely in one task
-    (hash partitioning by value — exactly one part file per wave
-    directory), and a single ``partitionBy`` write lands all waves.
-    The previous per-wave ``filter(...).coalesce(1)`` loop recomputed
-    the ENTIRE upstream pipeline once per wave, and the coalesce
-    collapsed each of those recomputes to a single task (guide §2.4 /
-    §2.6 — n_waves serial full passes where one shuffle suffices);
-    callers staging an expensive upstream (containment shingling,
-    sn_records, per-row md5 hashing) paid it n_waves times.
-
-    Callers fold through ``run_bounded(..., min_commits=n_staged)``,
-    with ``small_state=True`` when the per-wave partials are
-    vocab/histogram-bounded (a session-width reduce only multiplies
-    ledger files — guide §6); corpus-scaled appends keep the default."""
-    import glob as _glob
-    import shutil
-    import time as _time
-
-    work = scratch_dir(prefix=prefix)
-    in_dir = os.path.join(work, "in")
-    os.makedirs(in_dir, exist_ok=True)
-    now = _time.time()
-    n_staged = 0
-    tmp = os.path.join(work, "tmpwaves")
-    (
-        df.withColumn("_wv", (F.col(key_col) % n_waves).cast("int"))
-        .repartition(F.col("_wv"))
-        .write.partitionBy("_wv")
-        .parquet(tmp)
-    )
-    for wv in range(n_waves):
-        # an empty wave legitimately produces NO partition directory —
-        # skip it and let the caller derive the commit floor from
-        # n_staged (ADVICE r13)
-        parts = _glob.glob(os.path.join(tmp, f"_wv={wv}", "part-*.parquet"))
-        if not parts:
-            continue
-        if len(parts) > 1:  # hash-partitioning invariant: 1 task per wave
-            raise AssertionError(
-                f"{prefix}: wave {wv} staged as {len(parts)} files"
-            )
-        staged = os.path.join(in_dir, f"{wv:03d}.parquet")
-        shutil.copyfile(parts[0], staged)
-        os.utime(staged, (now - 100 + wv, now - 100 + wv))
-        n_staged += 1
-    if n_staged == 0:
-        raise AssertionError(
-            f"{prefix}: every staged wave was empty — nothing to replay"
-        )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    return work, stream, n_staged
 
 
 def stream_winnowing(
@@ -1920,26 +1839,13 @@ def stream_winnowing(
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    work, stream, n_staged = _staged_waves(
+    fps = _fold_to_ledger(
         spark,
+        "stream_winnowing",
         docs,
-        "doc_id",
-        "doc_id long, text string",
-        n_waves,
-        "spark_winnow_stream_",
+        F.col("doc_id") % n_waves,
+        winnowing_fingerprints,
     )
-    ledger = os.path.join(work, "ledger")
-
-    def fold(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        winnowing_fingerprints(batch_df).write.mode("append").parquet(ledger)
-
-    run_bounded(
-        spark, stream.writeStream.foreachBatch(fold), "stream_winnowing",
-        min_commits=n_staged,
-    )
-    fps = spark.read.parquet(ledger)
     return winnowing_pairs_from_fps(fps)
 
 
@@ -1965,27 +1871,14 @@ def stream_skyline(
     )
 
     base = skyline_base(spark, sf_dir)
-    work, stream, n_staged = _staged_waves(
+    merged = _fold_to_ledger(
         spark,
+        "stream_skyline",
         base,
-        "o_orderkey",
-        "segment string, o_orderkey long, price_cents long,"
-        " order_date string, day_n long",
-        n_waves,
-        "spark_skyline_stream_",
+        F.col("o_orderkey") % n_waves,
+        skyline_filter,
+        small_state=True,
     )
-    ledger = os.path.join(work, "ledger")
-
-    def fold(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        skyline_filter(batch_df).write.mode("append").parquet(ledger)
-
-    run_bounded(
-        spark, stream.writeStream.foreachBatch(fold), "stream_skyline",
-        min_commits=n_staged, small_state=True,
-    )
-    merged = spark.read.parquet(ledger)
     return (
         skyline_filter(merged)
         .select("segment", "o_orderkey", "price_cents", "order_date")
@@ -2008,33 +1901,18 @@ def stream_ipf(spark: SparkSession, sf_dir: str, n_waves: int = 3) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source"
     )
-    work, stream, n_staged = _staged_waves(
+    partials = _fold_to_ledger(
         spark,
+        "stream_ipf",
         docs,
-        "doc_id",
-        "doc_id long, lang string, source string",
-        n_waves,
-        "spark_ipf_stream_",
-    )
-    ledger = os.path.join(work, "ledger")
-
-    def fold(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        (
-            batch_df.groupBy("lang", "source")
-            .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-            .write.mode("append")
-            .parquet(ledger)
-        )
-
-    run_bounded(
-        spark, stream.writeStream.foreachBatch(fold), "stream_ipf",
-        min_commits=n_staged, small_state=True,
+        F.col("doc_id") % n_waves,
+        lambda b: b.groupBy("lang", "source").agg(
+            F.count(F.lit(1)).cast("long").alias("cnt")
+        ),
+        small_state=True,
     )
     cells = (
-        spark.read.parquet(ledger)
-        .groupBy("lang", "source")
+        partials.groupBy("lang", "source")
         .agg(F.sum("cnt").cast("long").alias("n_docs"))
     )
     return ipf_from_cells(cells)
@@ -2077,14 +1955,7 @@ def stream_golden_record(
     recs = sn_records(spark, sf_dir).withColumn(
         "wk", hash32(F.col("p_name"), "snw:")
     )
-    work, stream, n_staged = _staged_waves(
-        spark,
-        recs,
-        "wk",
-        "p_name string, n_parts long, wk long",
-        n_waves,
-        "spark_goldrec_stream_",
-    )
+    work = scratch_dir(prefix="spark_goldrec_stream_")
     rec_dir = os.path.join(work, "records")
     pair_dir = os.path.join(work, "pairs")
 
@@ -2112,9 +1983,12 @@ def stream_golden_record(
             .parquet(pair_dir)
         )
 
-    run_bounded(
-        spark, stream.writeStream.foreachBatch(fold), "stream_golden_record",
-        min_commits=n_staged,
+    run_staged_replay(
+        spark,
+        lambda s: s.writeStream.foreachBatch(fold),
+        "stream_golden_record",
+        frame=recs,
+        wave=F.col("wk") % n_waves,
     )
     edges = (
         spark.read.parquet(pair_dir)
@@ -2146,35 +2020,19 @@ def stream_bpe_vocab(
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    work, stream, n_staged = _staged_waves(
+    partials = _fold_to_ledger(
         spark,
+        "stream_bpe_vocab",
         docs,
-        "doc_id",
-        "doc_id long, text string",
-        n_waves,
-        "spark_bpevocab_stream_",
-    )
-    ledger = os.path.join(work, "vocab")
-
-    def fold(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        (
-            batch_df.select(F.explode(tokens(F.col("text"))).alias("w"))
-            .filter(F.col("w").rlike("^[a-z]{2,}$"))
-            .groupBy("w")
-            .agg(F.count(F.lit(1)).cast("long").alias("freq"))
-            .write.mode("append")
-            .parquet(ledger)
-        )
-
-    run_bounded(
-        spark, stream.writeStream.foreachBatch(fold), "stream_bpe_vocab",
-        min_commits=n_staged, small_state=True,
+        F.col("doc_id") % n_waves,
+        lambda b: b.select(F.explode(tokens(F.col("text"))).alias("w"))
+        .filter(F.col("w").rlike("^[a-z]{2,}$"))
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).cast("long").alias("freq")),
+        small_state=True,
     )
     words = (
-        spark.read.parquet(ledger)
-        .groupBy("w")
+        partials.groupBy("w")
         .agg(F.sum("freq").cast("long").alias("freq"))
     )
     return bpe_merges_from_vocab(spark, words, n_merges)
@@ -2201,36 +2059,19 @@ def stream_pr_auc(
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
         (F.col("o_orderstatus") == "F").cast("int").alias("pos"),
     )
-    work, stream, n_staged = _staged_waves(
+    partials = _fold_to_ledger(
         spark,
+        "stream_pr_auc",
         orders,
-        "o_orderkey",
-        "o_orderkey long, grp string, cents long, pos int",
-        n_waves,
-        "spark_prauc_stream_",
-    )
-    ledger = os.path.join(work, "hist")
-
-    def fold(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        (
-            batch_df.groupBy("grp", "cents")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("t"),
-                F.sum("pos").cast("long").alias("tp"),
-            )
-            .write.mode("append")
-            .parquet(ledger)
-        )
-
-    run_bounded(
-        spark, stream.writeStream.foreachBatch(fold), "stream_pr_auc",
-        min_commits=n_staged, small_state=True,
+        F.col("o_orderkey") % n_waves,
+        lambda b: b.groupBy("grp", "cents").agg(
+            F.count(F.lit(1)).cast("long").alias("t"),
+            F.sum("pos").cast("long").alias("tp"),
+        ),
+        small_state=True,
     )
     hist = (
-        spark.read.parquet(ledger)
-        .groupBy("grp", "cents")
+        partials.groupBy("grp", "cents")
         .agg(
             F.sum("t").cast("long").alias("t"),
             F.sum("tp").cast("long").alias("tp"),
@@ -2261,26 +2102,14 @@ def stream_containment(
     )
 
     sh = containment_shingles(spark, sf_dir)
-    work, stream, n_staged = _staged_waves(
+    shingles = _fold_to_ledger(
         spark,
+        "stream_containment",
         sh,
-        "doc_id",
-        "doc_id long, sh array<string>",
-        n_waves,
-        "spark_containment_stream_",
+        F.col("doc_id") % n_waves,
+        lambda b: b,
     )
-    ledger = os.path.join(work, "shingles")
-
-    def fold(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batch_df.write.mode("append").parquet(ledger)
-
-    run_bounded(
-        spark, stream.writeStream.foreachBatch(fold), "stream_containment",
-        min_commits=n_staged,
-    )
-    return containment_from_shingles(spark.read.parquet(ledger))
+    return containment_from_shingles(shingles)
 
 
 def stream_containment_index(
@@ -2304,24 +2133,21 @@ def stream_containment_index(
     )
 
     sh = containment_shingles(spark, sf_dir)
-    work, stream, n_staged = _staged_waves(
-        spark,
-        sh,
-        "doc_id",
-        "doc_id long, sh array<string>",
-        n_waves,
-        "spark_containment_idx_stream_",
+    index_dir = os.path.join(
+        scratch_dir(prefix="spark_containment_idx_stream_"), "index"
     )
-    index_dir = os.path.join(work, "index")
 
     def fold(batch_df: DataFrame, _batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         update_containment_index(spark, batch_df, index_dir)
 
-    run_bounded(
-        spark, stream.writeStream.foreachBatch(fold), "stream_containment_index",
-        min_commits=n_staged,
+    run_staged_replay(
+        spark,
+        lambda s: s.writeStream.foreachBatch(fold),
+        "stream_containment_index",
+        frame=sh,
+        wave=F.col("doc_id") % n_waves,
     )
     return probe_containment_index(spark, index_dir)
 
@@ -2342,34 +2168,25 @@ def stream_mann_whitney(
     )
 
     users = mwu_user_frame(spark, sf_dir)
-    work, stream, n_staged = _staged_waves(
-        spark,
-        users,
-        "user_id",
-        "user_id long, segment string, x long, treat int",
-        n_waves,
-        "spark_mwu_stream_",
-    )
-    ledger = os.path.join(work, "hist")
-
-    def fold(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def partial_hist(batch_df: DataFrame) -> DataFrame:
         both = batch_df.unionByName(
             batch_df.withColumn("segment", F.lit("__all"))
         )
-        both.groupBy("segment", "x").agg(
+        return both.groupBy("segment", "x").agg(
             F.count(F.lit(1)).cast("long").alias("t"),
             F.sum("treat").cast("long").alias("t1"),
-        ).write.mode("append").parquet(ledger)
+        )
 
-    run_bounded(
-        spark, stream.writeStream.foreachBatch(fold), "stream_mann_whitney",
-        min_commits=n_staged, small_state=True,
+    partials = _fold_to_ledger(
+        spark,
+        "stream_mann_whitney",
+        users,
+        F.col("user_id") % n_waves,
+        partial_hist,
+        small_state=True,
     )
     hist = (
-        spark.read.parquet(ledger)
-        .groupBy("segment", "x")
+        partials.groupBy("segment", "x")
         .agg(
             F.sum("t").cast("long").alias("t"),
             F.sum("t1").cast("long").alias("t1"),
@@ -2410,33 +2227,18 @@ def stream_skew_monitor(
         .cast("long")
         .alias("key"),
     )
-    work, stream, n_staged = _staged_waves(
+    partials = _fold_to_ledger(
         spark,
+        "stream_skew_monitor",
         keyed,
-        "l_orderkey",
-        "l_orderkey long, key long",
-        n_waves,
-        "spark_skewmon_stream_",
-    )
-    ledger = os.path.join(work, "counts")
-
-    def fold(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        (
-            batch_df.groupBy("key")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-            .write.mode("append")
-            .parquet(ledger)
-        )
-
-    run_bounded(
-        spark, stream.writeStream.foreachBatch(fold), "stream_skew_monitor",
-        min_commits=n_staged, small_state=True,
+        F.col("l_orderkey") % n_waves,
+        lambda b: b.groupBy("key").agg(
+            F.count(F.lit(1)).cast("long").alias("n")
+        ),
+        small_state=True,
     )
     per_key = (
-        spark.read.parquet(ledger)
-        .groupBy("key")
+        partials.groupBy("key")
         .agg(F.sum("n").cast("long").alias("n"))
     )
     return salt_plan_from_counts(per_key)

@@ -65,3 +65,40 @@ def test_check_oracle_evidence_layout(spark, monkeypatch):
     for entry in doc["queries"].values():
         assert entry.keys() == {"status", "rows", "sec"}
         assert entry["status"] == "ok" and entry["rows"] > 0
+
+
+def test_bench_smoke_run_leaves_tracked_files_unchanged(monkeypatch, capsys):
+    """The committed ledger and BENCH_DETAIL.json record headline-sf
+    (sf0.1) runs only: an sf0.01 run reads them and writes neither, and
+    still prints the full stdout key set."""
+    import types
+
+    import bench
+
+    tracked = [
+        os.path.join(REPO, bench.SESSION_LEDGER),
+        os.path.join(REPO, "BENCH_DETAIL.json"),
+    ]
+    before = [open(p, "rb").read() for p in tracked]
+    fake_spark = types.SimpleNamespace(
+        sparkContext=types.SimpleNamespace(setLogLevel=lambda _level: None)
+    )
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    monkeypatch.setattr(bench, "settle", lambda: 0.0)
+    monkeypatch.setattr(bench, "get_spark", lambda _name: fake_spark)
+    monkeypatch.setattr(bench, "warm_up", lambda _spark, _sf_dir: None)
+    monkeypatch.setattr(bench, "prepare_shared_tier", lambda _spark, _sf_dir: 0.0)
+    monkeypatch.setattr(bench, "run_query", lambda _spark, _name, _sf_dir: (None, 0.01))
+    monkeypatch.setattr(bench, "release_shared", lambda: None)
+    bench.main()
+    assert [open(p, "rb").read() for p in tracked] == before
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert set(out) == {
+        "metric", "value", "unit", "n_queries", "queries",
+        "queries_truncated_to", "detail_file", "anchors",
+        "frozen_subset_total", "frozen_subset_n", "frozen_subset_ratio",
+        "frozen_subset_flag", "frozen_subset_advisory", "session_bracket",
+        "warm_retimes", "anchor_normalized_ratio", "anchor_band_sec",
+        "ambient_ok", "ambient_flag", "sf", "loadavg_1m", "settle_wait_sec",
+    }
+    assert out["sf"] == 0.01

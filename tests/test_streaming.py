@@ -99,23 +99,20 @@ def test_stream_blend_matches_batch_topk(spark):
     assert stream_shaped.exceptAll(batch).count() == 0
 
 
-def test_bootstrapped_features_equal_snapshot_plus_batch(spark, tmp_path):
+def test_bootstrapped_features_equal_snapshot_plus_batch(spark):
     """T4: after a bootstrapped replay, counters equal snapshot ⊕ batch
     aggregation — including a key that exists only in the snapshot."""
     from pyspark.sql import functions as F
 
     from project_bigdata_recsys_spark.streaming.jobs import (
-        bootstrapped_feature_stream,
+        run_bootstrapped_features,
     )
 
     snapshot = spark.createDataFrame(
         [(1, "click", 10, 100.0), (424242, "view", 5, 2.5)],
         "user_id long, event_type string, n_events long, total_value double",
     )
-    stream = bootstrapped_feature_stream(
-        spark, SF_SMALL, snapshot, str(tmp_path / "staged")
-    )
-    _run_to_memory(stream, "boot_t", "update")
+    run_bootstrapped_features(spark, SF_SMALL, snapshot, "boot_t")
     got = spark.sql(
         "SELECT user_id, event_type, max(n_events) AS n_events, "
         "max(total_value) AS total_value FROM boot_t GROUP BY 1, 2"
@@ -442,28 +439,156 @@ def test_bounded_streams_awaited_only_in_runner():
     """One way to run a bounded stream: awaitTermination is called only
     by run_bounded and _run_replay_incremental (which keeps its own
     processing-time trigger and row-count stop).  This also keeps the
-    pin's single-driver-thread contract checkable in one place."""
+    pin's single-driver-thread contract checkable in one place.  One way
+    to stage a multi-file replay: os.utime (the file-order pin) and the
+    maxFilesPerTrigger option appear only in run_staged_replay — plus,
+    for the option, the two live builders that read a caller-owned
+    directory."""
+    staged = ("streaming/jobs.py", "run_staged_replay")
     allowed = {
-        ("streaming/jobs.py", "run_bounded"),
-        ("streaming/replay.py", "_run_replay_incremental"),
+        "awaitTermination": {
+            ("streaming/jobs.py", "run_bounded"),
+            ("streaming/replay.py", "_run_replay_incremental"),
+        },
+        "utime": {staged},
+        "maxFilesPerTrigger": {
+            staged,
+            ("streaming/jobs.py", "replay_events_stream"),
+            ("streaming/jobs.py", "model_scoring_writer"),
+        },
     }
     pkg = os.path.dirname(os.path.dirname(J.__file__))
-    found = []
+    found = {what: set() for what in allowed}
 
     def visit(node, rel, fn):
         for child in ast.iter_child_nodes(node):
             if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 visit(child, rel, child.name)
                 continue
-            if isinstance(child, ast.Attribute) and child.attr == "awaitTermination":
-                found.append((rel, fn))
+            if isinstance(child, ast.Attribute) and child.attr in found:
+                found[child.attr].add((rel, fn))
+            if isinstance(child, ast.Constant) and child.value == "maxFilesPerTrigger":
+                found["maxFilesPerTrigger"].add((rel, fn))
             visit(child, rel, fn)
 
     for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
         with open(path) as f:
             tree = ast.parse(f.read())
         visit(tree, os.path.relpath(path, pkg).replace(os.sep, "/"), None)
-    assert found and set(found) <= allowed, sorted(set(found) - allowed)
+    for what, sites in found.items():
+        assert sites and sites <= allowed[what], (what, sorted(sites - allowed[what]))
+    assert staged in found["utime"] and staged in found["maxFilesPerTrigger"]
+
+
+# --------------------------------------------------------------------------
+# run_staged_replay: the one place a multi-file replay is staged (T8)
+# --------------------------------------------------------------------------
+def _record_staged_runs(monkeypatch) -> list:
+    """Record (floor passed to run_bounded, files staged for the run) for
+    every bounded run of the streaming modules."""
+    runs = []
+    dirs = []
+    real_scratch, real_run = J.scratch_dir, J.run_bounded
+
+    def scratch(prefix):
+        d = real_scratch(prefix)
+        dirs.append((prefix, d))
+        return d
+
+    def run(spark, writer, name, **kw):
+        staged = [
+            d for prefix, d in dirs if prefix == f"spark_{name}_"
+        ]
+        n_files = (
+            len(glob.glob(os.path.join(staged[-1], "in", "*.parquet")))
+            if staged
+            else 0
+        )
+        runs.append((kw.get("min_commits", 0), n_files))
+        return real_run(spark, writer, name, **kw)
+
+    monkeypatch.setattr(J, "scratch_dir", scratch)
+    monkeypatch.setattr(J, "run_bounded", run)
+    monkeypatch.setattr(R, "run_bounded", run)
+    return runs
+
+
+@pytest.mark.parametrize(
+    "query",
+    [
+        "stream_dedup_events",
+        "stream_late_data_audit",
+        "stream_bootstrapped_features",
+        "stream_domain_quota",
+        "stream_kmv_distinct",
+        "stream_update_ann_index",
+        "stream_ann_compaction",
+    ],
+)
+def test_multi_file_replay_enforces_floor(spark, monkeypatch, query):
+    # each replay stages several files; its run must assert one commit
+    # per staged file, or a collapse into one micro-batch goes unseen
+    runs = _record_staged_runs(monkeypatch)
+    getattr(R, query)(spark, SF_SMALL)
+    assert len(runs) == 1, runs
+    floor, n_files = runs[0]
+    assert floor >= 2 and floor == n_files, runs
+
+
+def _noop_writer(stream):
+    return stream.writeStream.foreachBatch(lambda _df, _id: None)
+
+
+def test_staged_replay_floor_counts_nonempty_waves(spark, monkeypatch):
+    from pyspark.sql import functions as F
+
+    runs = _record_staged_runs(monkeypatch)
+    J.run_staged_replay(
+        spark,
+        _noop_writer,
+        "staged_two_t",
+        frame=spark.range(12).filter("id % 3 != 1"),
+        wave=F.col("id") % 3,
+    )
+    assert runs == [(2, 2)]
+
+
+def test_staged_replay_all_empty_raises(spark):
+    from pyspark.sql import functions as F
+
+    with pytest.raises(AssertionError, match="nothing to replay"):
+        J.run_staged_replay(
+            spark,
+            _noop_writer,
+            "staged_empty_t",
+            frame=spark.range(0),
+            wave=F.col("id") % 3,
+        )
+
+
+def test_staged_replay_stream_schema_is_the_frames(spark):
+    from pyspark.sql import functions as F
+
+    frame = spark.range(6).select(
+        "id",
+        (F.col("id") * 0.5).alias("x"),
+        F.array(F.col("id").cast("string")).alias("tags"),
+        F.lit(1).cast("int").alias("k"),
+    )
+    seen = []
+
+    def to_writer(stream):
+        seen.append(stream.schema)
+        return _noop_writer(stream)
+
+    J.run_staged_replay(
+        spark, to_writer, "staged_schema_t", frame=frame, wave=F.col("id") % 2
+    )
+    # the file source forces every field (array elements too) nullable,
+    # so names and types compare without nullability
+    assert [(f.name, f.dataType.simpleString()) for f in seen[0]] == [
+        (f.name, f.dataType.simpleString()) for f in frame.schema
+    ]
 
 
 # --------------------------------------------------------------------------

@@ -32,6 +32,7 @@ import json
 import os
 import subprocess
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -91,24 +92,28 @@ def main() -> int:
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = args[1:]
     outs = {}
-    for tag, env in CONFIGS.items():
-        out_path = f"/tmp/order_stability_{tag}.json"
-        e = dict(os.environ, **env)
-        rc = subprocess.run(
-            [
-                sys.executable,
-                os.path.abspath(__file__),
-                "--worker",
-                sf_dir,
-                out_path,
-                *only,
-            ],
-            env=e,
-        ).returncode
-        if rc:
-            print(f"config {tag} worker failed rc={rc}")
-            return 2
-        outs[tag] = json.load(open(out_path))
+    # per-run maps: concurrent runs never read each other's results, and
+    # nothing outlives the run
+    with tempfile.TemporaryDirectory(prefix="order_stability_") as tmp:
+        for tag, env in CONFIGS.items():
+            out_path = os.path.join(tmp, f"{tag}.json")
+            e = dict(os.environ, **env)
+            rc = subprocess.run(
+                [
+                    sys.executable,
+                    os.path.abspath(__file__),
+                    "--worker",
+                    sf_dir,
+                    out_path,
+                    *only,
+                ],
+                env=e,
+            ).returncode
+            if rc:
+                print(f"config {tag} worker failed rc={rc}")
+                return 2
+            with open(out_path) as fh:
+                outs[tag] = json.load(fh)
 
     a, b = outs["a"], outs["b"]
     n_ok = n_bad = n_err = 0
