@@ -9,6 +9,18 @@ The reference's system of record is five PostgreSQL heap tables
 read through Spark's vectorized reader, which gives predicate pushdown and
 column pruning for free — the two optimizations the reference manually
 approximates with narrow SELECT lists (reference dashboard/app.py:273-283).
+
+Every read of a table goes through :func:`load_table`, and every schema a
+stream or a replay needs from a table file through :func:`parquet_schema`.
+Inferring a parquet schema submits one Spark job, so the inferred schema of
+a regular file is cached in-process, keyed by the file's absolute path,
+size and ``st_mtime_ns`` plus the values of the SQL confs the parquet
+reader consults when it maps a footer to Spark types (``_SCHEMA_CONFS``);
+a read of an unchanged file then passes ``.schema(s)`` and submits no job.
+A directory (a table Spark wrote, or a path ``os.stat`` cannot see) is
+inferred on every read: its part files can change while the directory's
+own size and mtime stay put.  Only schemas are cached, never DataFrames:
+each call builds a fresh relation, so self-joins get fresh attribute ids.
 """
 
 from __future__ import annotations
@@ -16,6 +28,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = [
     "region",
@@ -40,8 +53,39 @@ BROADCAST_TABLES = {"region", "nation", "supplier"}
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+#: SQL confs that change the Spark schema read from one parquet footer
+#: (nanos as long, NTZ inference, binary as string, INT96 as timestamp).
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, before any
+    normalization.  A regular file's schema is inferred once per (path,
+    size, mtime, schema confs) and then served from the cache without a
+    job; any other path is inferred on every call."""
+    if not os.path.isfile(path):
+        return spark.read.parquet(path).schema
+    st = os.stat(path)
+    key = (
+        os.path.abspath(path),
+        st.st_size,
+        st.st_mtime_ns,
+        *(spark.conf.get(c) for c in _SCHEMA_CONFS),
+    )
+    if key not in _SCHEMAS:
+        _SCHEMAS[key] = spark.read.parquet(path).schema
+    return _SCHEMAS[key]
 
 
 def normalize_events(df: DataFrame) -> DataFrame:
@@ -85,12 +129,15 @@ def _ensure_session_confs(spark: SparkSession) -> None:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one test-data table.  Parquet carries the schema; no inference."""
+    """Load one test-data table as a new DataFrame.  The read is given
+    :func:`parquet_schema`'s schema, so after the first read of an
+    unchanged table file under the same confs it submits no job."""
     from project_bigdata_recsys_spark.functions.fixedpoint import note_sf_dir
 
     note_sf_dir(sf_dir)
     _ensure_session_confs(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if name == "events":
         df = normalize_events(df)
     return df

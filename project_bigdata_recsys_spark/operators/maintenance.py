@@ -498,7 +498,11 @@ def stream_merge_apply_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     from project_bigdata_recsys_spark.caching import scratch_dir
 
-    from project_bigdata_recsys_spark.catalog import load_table, table_path
+    from project_bigdata_recsys_spark.catalog import (
+        load_table,
+        parquet_schema,
+        table_path,
+    )
     from project_bigdata_recsys_spark.functions.fixedpoint import sum_fixed
     from project_bigdata_recsys_spark.operators.snapshot import (
         bump_price_cents,
@@ -520,7 +524,7 @@ def stream_merge_apply_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.sparkContext.defaultParallelism, F.col("part")
     ).write.mode("overwrite").partitionBy("part").parquet(target)
 
-    schema = spark.read.parquet(table_path(sf_dir, "orders")).schema
+    schema = parquet_schema(spark, table_path(sf_dir, "orders"))
     stream = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "orders.parquet")

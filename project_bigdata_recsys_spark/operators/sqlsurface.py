@@ -31,7 +31,9 @@ _VIEW_TABLES = ("customer", "orders", "lineitem", "part", "supplier")
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Expose the catalog tables as temp views for raw-SQL queries —
-    idempotent, session-scoped, pinned schemas from catalog.load_table."""
+    idempotent and session-scoped.  Each view is a new
+    catalog.load_table relation read with the cached file schema, so
+    re-registering submits no schema-inference job."""
     for t in _VIEW_TABLES:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 

@@ -427,8 +427,6 @@ def stream_join_view_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.makedirs(dirs["fact_ledger"], exist_ok=True)
 
     def append_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         batch_df.write.mode("append").parquet(dirs["fact_ledger"])
 
     run_staged_replay(

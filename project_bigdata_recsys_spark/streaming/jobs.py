@@ -41,7 +41,11 @@ from pyspark.sql.types import (
 )
 
 from project_bigdata_recsys_spark.caching import scratch_dir
-from project_bigdata_recsys_spark.catalog import load_table, table_path
+from project_bigdata_recsys_spark.catalog import (
+    load_table,
+    parquet_schema,
+    table_path,
+)
 
 #: Kafka-event schema (reference core-logic/run_producer.py:99-104) —
 #: used by kafka_events_stream for real-broker deployments.
@@ -64,7 +68,7 @@ def replay_events_stream(
     pinned to the events file; ts is normalized exactly as in batch."""
     from project_bigdata_recsys_spark.catalog import normalize_events
 
-    raw_schema = spark.read.parquet(table_path(sf_dir, "events")).schema
+    raw_schema = parquet_schema(spark, table_path(sf_dir, "events"))
     stream = (
         spark.readStream.schema(raw_schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -511,7 +515,10 @@ def run_staged_replay(
     pin that order for the file source.  The stream schema is the
     frame's (the first file's when there is no frame), never a
     hand-typed literal; the file source reads every column as nullable.
-    Raises AssertionError when nothing is staged.
+    Raises AssertionError when nothing is staged.  Only waves that hold
+    rows are staged, so a ``foreachBatch`` fold over a ``frame`` replay
+    never sees an empty micro-batch and needs no ``isEmpty()`` guard
+    (a job per batch).
 
     Staging the frame is ONE parallel job: ``repartition`` by the wave
     column puts every wave entirely in one task (hash partitioning by
@@ -562,7 +569,7 @@ def run_staged_replay(
     if frame is not None:
         schema = frame.schema
     else:
-        schema = spark.read.parquet(files[0]).schema
+        schema = parquet_schema(spark, files[0])
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
