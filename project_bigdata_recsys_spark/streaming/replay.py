@@ -59,11 +59,15 @@ def _drain_sink(spark: SparkSession, name: str) -> DataFrame:
     later query (guide §5 — the driver should do almost no data work).
     Parquet-backing also gives every caller self-join-safe attribute
     ids — the workaround stream_bootstrap_ci / stream_cusum_changepoint
-    had to hand-roll against memory-sink frames, now centralized."""
+    had to hand-roll against memory-sink frames, now centralized.  The
+    snapshot is read back with the sink's schema, so the read submits no
+    schema-inference job."""
     out = os.path.join(scratch_dir(prefix="spark_sink_"), "sink")
-    spark.table(name).write.mode("overwrite").parquet(out)
+    table = spark.table(name)
+    schema = table.schema
+    table.write.mode("overwrite").parquet(out)
     spark.catalog.dropTempView(name)
-    return spark.read.parquet(out)
+    return spark.read.schema(schema).parquet(out)
 
 
 def _run_staged(
@@ -99,13 +103,20 @@ def _fold_to_ledger(
     ledger scan for the post-replay merge.  The plain-append form of the
     ledger-fold family; ``small_state=True`` when the per-wave partials
     are vocab/histogram-bounded (a session-width reduce only multiplies
-    ledger files — guide §6), corpus-scaled appends keep the default."""
+    ledger files — guide §6), corpus-scaled appends keep the default.
+    The ledger is read back with the schema of the first appended batch
+    (taken on the driver, no job), so the read submits no schema-inference
+    job."""
     ledger = os.path.join(
         scratch_dir(prefix=f"spark_{name}_ledger_"), "ledger"
     )
+    schema = []
 
     def fold(batch_df: DataFrame, _batch_id: int) -> None:
-        per_batch(batch_df).write.mode("append").parquet(ledger)
+        out = per_batch(batch_df)
+        if not schema:
+            schema.append(out.schema)
+        out.write.mode("append").parquet(ledger)
 
     run_staged_replay(
         spark,
@@ -115,7 +126,7 @@ def _fold_to_ledger(
         wave=wave,
         small_state=small_state,
     )
-    return spark.read.parquet(ledger)
+    return spark.read.schema(schema[0]).parquet(ledger)
 
 
 def _run_replay_incremental(

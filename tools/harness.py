@@ -62,9 +62,13 @@ def warm_up(spark, sf_dir: str) -> None:
     """JVM/codegen warm-up so timings measure the plan, not first-run
     compilation: one generic query on ``sf_dir``, plus the RP-hash ANN
     family at WARM_SF (their 24-projection higher-order expressions cost
-    seconds of Janino compile, a one-time cost that would dominate a
-    2000-row query's number).  simhash_near_pairs also warms the 64-bit
-    vote codegen the connected-component family shares."""
+    seconds of Janino compile, which would dominate a 2000-row query's
+    number).  simhash_near_pairs also warms the 64-bit vote codegen the
+    connected-component family shares.  A timed entry reuses a class
+    compiled here only while fewer classes than the session's cache
+    bound (``spark.sql.codegen.cache.maxEntries``, 1024 from
+    ``get_spark``) are compiled in between; a long run recompiles the
+    evicted ones."""
     QUERIES["label_histogram"](spark, sf_dir).collect()
     if os.path.isdir(WARM_SF):
         for name in ("knn_graph", "knn_ivf_lloyd", "simhash_near_pairs"):
